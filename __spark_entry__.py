@@ -53,8 +53,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, ordered so
-    the driver's scored window (first 50 entries) covers the qids that
-    have not yet received a CORRECTNESS row (registry.DRIVER_ORDER)."""
+    the driver's scored window (first 50 entries) holds the qids with
+    the oldest or no CORRECTNESS row (registry.scored_window)."""
     from aprsdb_spark.registry import QUERIES, driver_ordered, load_all
 
     load_all()
@@ -62,7 +62,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for every hash-checkable qid."""
+    """DuckDB-runnable ANSI SQL twin for every hash-checkable qid, in
+    the same head order as queries()."""
     from aprsdb_spark.registry import ORACLE, driver_ordered, load_all
 
     load_all()

@@ -230,8 +230,9 @@ def hyperplane_sketch(vec: str, n_planes: int = 16, dim: int = 64) -> Column:
     sign matrix under zip_with and null the whole accumulator (where the
     old per-plane form yielded bit 0), and ``n_planes`` must stay <= 31
     because shiftleft(1, p) is INT arithmetic (the old F.lit(1 << p)
-    promoted to long). Both are asserted here rather than silently
-    diverging; every registered embedding fixture is dim=64."""
+    promoted to long). Only the plane-count bound is asserted here. The
+    dim contract is the caller's: every registered embedding fixture is
+    dim=64, and a per-row size check would add work to every LSH qid."""
     assert 0 < n_planes <= 31, f"n_planes={n_planes}: shiftleft(1, p) overflows INT past 31"
     mat_t = _sign_matrix_t_sql(n_planes, dim)
     projs = (
@@ -283,7 +284,8 @@ def hyperplane_band_keys(
 
     Contract (ADVICE r16, same as hyperplane_sketch): input vectors must
     hold EXACTLY ``dim`` elements, and ``planes_per_band`` must stay
-    <= 31 (the in-band shiftleft(1, p % planes_per_band) is INT)."""
+    <= 31 (the in-band shiftleft(1, p % planes_per_band) is INT). Only
+    the ``planes_per_band`` bound is asserted."""
     assert 0 < planes_per_band <= 31, (
         f"planes_per_band={planes_per_band}: in-band shiftleft overflows INT past 31"
     )
@@ -839,14 +841,17 @@ def query_vector(sf_dir: str, vec_id: int = 0) -> tuple:
     A non-local sf_dir URI (or any unreadable path) falls back to the
     pre-r16 Spark head() job — pyarrow only reads local/NFS paths, and
     the 9 panel qids must keep working on remote storage (ADVICE r16;
-    the same 'assume remote' posture as tables._est_scan_splits)."""
+    the same 'assume remote' posture as tables._est_scan_splits).
+    ValueError is caught beside OSError because pyarrow rejects an
+    unknown URI scheme (dbfs:/, wasbs://) with ArrowInvalid, a
+    ValueError subclass."""
     try:
         import pyarrow.parquet as pq
 
         tbl = pq.read_table(
             f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
         ).to_pydict()
-    except (OSError, ImportError):
+    except (OSError, ValueError, ImportError):
         row = (
             SparkSession.getActiveSession()
             .read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -880,7 +885,7 @@ def query_panel(sf_dir: str, n: int, with_label: bool = False):
         import pyarrow.parquet as pq
 
         tbl = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=cols).to_pydict()
-    except (OSError, ImportError):
+    except (OSError, ValueError, ImportError):
         collected = (
             SparkSession.getActiveSession()
             .read.parquet(f"{sf_dir}/embeddings.parquet")

@@ -394,6 +394,9 @@ _Q2_SPARK = _Q2.replace(
            WHERE p_size <= 10 AND p_type = 'LARGE')
       GROUP BY l_partkey, l_suppkey""",
 )
+# A drifted anchor must fail at import, not silently fall back to the
+# unfiltered plan (same check after _Q11_SPARK and _Q20_SPARK).
+assert _Q2_SPARK != _Q2, "_Q2_SPARK: rollup anchor not found in _Q2"
 
 
 @query("c_sql_q2", oracle=_Q2.format(p=""))
@@ -603,6 +606,7 @@ _Q11_SPARK = _Q11.replace(
            WHERE r_name = 'EUROPE')
       GROUP BY l_partkey, l_suppkey""",
 )
+assert _Q11_SPARK != _Q11, "_Q11_SPARK: rollup anchor not found in _Q11"
 
 
 @query("c_sql_q11", oracle=_Q11.format(p=""))
@@ -726,6 +730,7 @@ _Q20_SPARK = _Q20.replace(
           (SELECT p_partkey FROM {p}part WHERE p_name LIKE '%bolt%')
       GROUP BY l_partkey, l_suppkey""",
 )
+assert _Q20_SPARK != _Q20, "_Q20_SPARK: rollup anchor not found in _Q20"
 
 
 @query("c_sql_q20", oracle=_Q20.format(p=""))

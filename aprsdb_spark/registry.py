@@ -9,7 +9,9 @@ dicts. A qid with ``oracle=None`` gets the driver's weaker rows-only check
 from __future__ import annotations
 
 import functools
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,246 +58,41 @@ def load_all() -> None:
 
 # The driver's correctness gate scores exactly the FIRST 50 entries of
 # __spark_entry__.queries() in insertion order, then stops (observed:
-# every CORRECTNESS_r{N}.json ends at registry position 50). DRIVER_ORDER
-# pins which qids occupy that scored window. Round-16 rotation, exactly
-# the arithmetic the r15 comment promised and the r15 verdict prescribed
-# ("execute the r16 rotation exactly as staged"):
-# (1) ALL 20 never-scored r15 additions from the r15 NEXT_QUEUE, in
-# queue order — the sketch-family closure (KLL sizing curve, KMV
-# Jaccard), tokenizer/text-integrity audits, the inference closure
-# (ANOVA / Kruskal-Wallis / Fleiss / McNemar / Cochran), retrieval
-# evaluation (RBO, ROUGE, MMR), governance (t-closeness, filter bias,
-# two-proportion z), distribution forensics (JS, Theil, Benford) and
-# the time-series/runs audits; (2) the 28 r15 REFRESH_QUEUE qids (the
-# first 28 of the 40 r8-scored cohort, registration order); (3) the two
-# harness-breakage canaries a_scan_parquet / e_win_lastpos.
-# 20 + 28 + 2 = 50. When this window lands, every registered qid's
-# driver evidence is r8 or newer and only 12 r8-scored qids remain
-# (REFRESH_QUEUE below, first for r17; age 17 - 8 = 9 <= bound at the
-# post-r16 registry size, and they are queued so the staleness test
-# accepts them either way).
-# The staleness bound max(4, ceil(N/48)) is derived from registry size
-# in tests/test_registry_order.py, so this schedule is checked, not
-# promised.
-DRIVER_ORDER: list[str] = [
-    # canary: a_scan_parquet (trivial scan — breaks only if the harness does)
-    "a_scan_parquet",
-    # never-scored (r15): the full r15 NEXT_QUEUE in its queue order
-    "j_quantile_sketch_curve",
-    "j_kmv_jaccard",
-    "j_text_integrity",
-    "j_bpe_roundtrip",
-    "j_anova_oneway",
-    "j_kruskal_wallis",
-    "j_fleiss_kappa",
-    "j_rbo_overlap",
-    "j_rouge_recall",
-    "j_t_closeness",
-    "j_ts_crosscorr",
-    "j_mcnemar_test",
-    "j_cochran_q",
-    "j_benford_digits",
-    "j_mmr_diversity",
-    "j_js_divergence",
-    "j_theil_index",
-    "j_filter_bias",
-    "j_two_proportion_z",
-    "j_runs_test",
-    # oldest-evidence refresh: the first 28 of the 40 r8-scored qids,
-    # registration order (the full r15 REFRESH_QUEUE)
-    "j_dedup_exact",
-    "j_dedup_ngram",
-    "j_dedup_near",
-    "j_sim_topk",
-    "j_sim_pairs",
-    "j_dedup_embed",
-    "j_sim_pairs_bucketed",
-    "j_dedup_embed_bucketed",
-    "j_sim_pairs_banded",
-    "j_lsh_recall_banded",
-    "j_ann_recall",
-    "j_hard_negatives",
-    "j_class_weights",
-    "j_ngram_novelty",
-    "j_skew_stats",
-    "j_compaction_plan",
-    "j_markov_transitions",
-    "j_bfs_distance",
-    "c_sql_recursive",
-    "j_chi2_independence",
-    "j_outlier_mad",
-    "k_map_in_arrow",
-    "j_ts_ewma",
-    "j_interval_overlap",
-    "j_rolling_corr",
-    "j_feature_snapshot",
-    "j_cdc_apply",
-    "j_dq_checks",
-    # canary: e_win_lastpos
-    "e_win_lastpos",
-]
-# qids added AFTER the current round's 50-slot window was frozen. Not
-# scoreable this round; everything here must be tri-scale-verified
-# locally (sf0.001/0.01/0.1 vs DuckDB, the same compare the driver
-# runs) and is FIRST in line for the next rotation.
-# test_registry_order.py enforces that a never-scored qid is either in
-# the window or on this explicit queue — nothing waits silently.
-NEXT_QUEUE: list[str] = [
-    # r16 additions land here as they are built (capacity: <= 20, since
-    # REFRESH_QUEUE below holds 28 and NEXT + REFRESH must fit one
-    # 48-slot window).
-    # r16 wave 1: malformed-input source semantics (the r15 verdict's
-    # queued candidate) — PERMISSIVE-mode CSV and JSONL scans over
-    # deterministically-corrupted derived files, with _corrupt_record
-    # accounting, byte-level raw-line reconstruction in the oracle, and
-    # the full-parse-vs-column-pruning gotcha pinned
-    "a_scan_csv_permissive",
-    "a_scan_json_permissive",
-    # r16 wave 2: community detection + graph-shelf closure (the r15
-    # verdict's queued candidate) — fixed-round synchronous label
-    # propagation with the unrolled-CTE oracle (j_pagerank discipline),
-    # its modularity score over the SAME shared LP chain, HashMin
-    # connected components, Adamic-Adar link prediction (integer-grid
-    # 1/ln(d) terms), and bounded-hop harmonic centrality
-    "j_label_propagation",
-    "j_modularity",
-    "j_connected_components",
-    "j_adamic_adar",
-    "j_harmonic_centrality",
-    # r16 wave 3: paired/blocked rank-test closure — Wilcoxon
-    # signed-rank on the paired daily click/view series (the paired
-    # member j_mannwhitney isn't), Friedman across three graded
-    # per-mille quality scorers with inline k=3 rank algebra, and
-    # Kendall's W concordance of the same scorer panel (doubled
-    # midranks end-to-end, the j_kruskal_wallis device)
-    "j_wilcoxon_signed",
-    "j_friedman_test",
-    "j_kendall_w",
-    # r16 wave 4: effect size + proper-scoring closure — Cohen's d /
-    # Hedges' g on the j_ab_ttest split (the standardized-size column
-    # a 100 TB A/B readout needs beside p-values) and Laplace-smoothed
-    # log loss on the shared _ece_votes panel (ECE/Brier/log-loss
-    # triad complete)
-    "j_cohens_d",
-    "j_log_loss",
-    # r16 wave 5: bounded-metric drift distance — Hellinger /
-    # Bhattacharyya per source on the j_kl_sources rollup
-    "j_hellinger",
-    # r16 wave 6: readability (Flesch + FK grade, integer count
-    # devices) and Average Precision per query (the MAP decomposition
-    # completing MRR/NDCG/AUC)
-    "j_readability",
-    "j_map_eval",
-    # r16 wave 7: nonparametric effect size + multiple-testing closure
-    # — Cliff's delta on the j_mannwhitney pair (2U/(nm) - 1 from the
-    # exact doubled-rank integer) and Holm-Bonferroni step-down FWER
-    # beside j_fdr_bh's step-up FDR on the identical p-value panel
-    "j_cliffs_delta",
-    "j_holm_bonferroni",
-    # r16 wave 8: trend / richness / portmanteau closure — the
-    # Cochran-Armitage dose-response test over ordered value bands,
-    # the Chao1 unseen-vocabulary estimator per source, and the
-    # Ljung-Box white-noise gate over the daily-volume ACF.
-    "j_cochran_armitage",
-    "j_chao1",
-    "j_ljung_box",
-    # r16 wave 9 (continuation session): robust-trend closure — the
-    # Mann-Kendall monotone-trend significance test per event type
-    # (exact integer S + tie-corrected 18*Var device) and the
-    # Theil-Sen median pairwise slope (1e-6-grid integer slopes, exact
-    # order-statistic median). Every slot beyond 20 here is paid for
-    # by dropping one r9-scored tail entry from REFRESH_QUEUE below
-    # (those qids are age 17-9=8 < the staleness bound at this
-    # registry size, so they can wait for r18 unqueued);
-    # test_registry_order.py pins NEXT + REFRESH <= 48 either way.
-    "j_mann_kendall",
-    "j_sen_slope",
-    # r16 wave 10 (continuation session): survival + regression-
-    # diagnostics closure — Kaplan-Meier product-limit retention over
-    # user lifetimes (scaled-BIGINT log-survival sums), the log-rank
-    # two-cohort comparison on the same lifetime data, Jarque-Bera
-    # normality of daily volumes (four exact power sums), and
-    # Durbin-Watson residual autocorrelation of the j_ts_trend OLS
-    # line (1e-4-grid integer residuals). Four more r9 tail entries
-    # dropped from REFRESH_QUEUE below, same arithmetic as wave 9.
-    "j_kaplan_meier",
-    "j_logrank_test",
-    "j_jarque_bera",
-    "j_durbin_watson",
-    # r16 wave 11 (continuation session): reliability + control-chart
-    # closure — Cronbach's alpha item panel over the five event-type
-    # "items" (exact integer variance numerators), first-order partial
-    # correlation of the click/purchase funnel edge controlling views,
-    # CUSUM mean-shift detection via the prefix-sum identity, and the
-    # EWMA control chart with its recursion unrolled onto the pair
-    # grid (per-term 1e-6 floors). Four more r9 tail entries dropped
-    # from REFRESH_QUEUE below, same arithmetic.
-    "j_cronbach_alpha",
-    "j_partial_corr",
-    "j_cusum_drift",
-    "j_ewma_chart",
-    # r16 wave 12 (continuation session): stratified-effect +
-    # long-memory closure — Krippendorff's alpha on the j_fleiss_kappa
-    # rater panel (coincidence-matrix integers), Mantel-Haenszel
-    # common OR + CMH chi2 for the even/odd click outcome stratified
-    # by week, additive trend+weekly-seasonal decomposition (OLS
-    # detrend, per-dow residual means), and the Hurst exponent by R/S
-    # analysis over the block-size grid. Four more r9 tail entries
-    # dropped from REFRESH_QUEUE below, same arithmetic.
-    "j_krippendorff_alpha",
-    "j_mantel_haenszel",
-    "j_seasonal_decompose",
-    "j_hurst_exponent",
-    # r16 wave 13 (continuation session, final): serial-order +
-    # homogeneity closure — PACF at lags 1..3 by the unrolled
-    # Durbin-Levinson closed forms on the gapped-calendar rhos, and
-    # the Breslow-Day OR-homogeneity audit under j_mantel_haenszel
-    # (quadratic expected cells seeded with the ROUNDED pooled OR).
-    # The last two r9 tail entries move off REFRESH_QUEUE below;
-    # NEXT (36) + REFRESH (12, the whole remaining r8 cohort) + 2
-    # canaries = 50 exactly.
-    "j_pacf",
-    "j_breslow_day",
-]
+# every CORRECTNESS_r{N}.json ends at registry position 50). That
+# window is derived from the committed evidence, not hand-kept: two
+# harness-breakage canaries pin its ends, and the 48 slots between them
+# go to the qids whose newest driver row is oldest (never scored first).
+CANARIES = ("a_scan_parquet", "e_win_lastpos")
+WINDOW = 50
+# Found from this file, not cwd: the driver imports the package from a
+# temp dir.
+_REPO = Path(__file__).resolve().parent.parent
 
-# Already-scored qids whose evidence is the oldest in the registry but
-# which did NOT fit this round's 50-slot window: scheduled FIRST for the
-# next rotation (after NEXT_QUEUE's never-scored entries). This is the
-# executable form of "deferred to r17" — test_registry_order.py accepts
-# queue membership as "scheduled", and a sibling test pins that only
-# already-scored qids may sit here (never-scored ones belong on
-# NEXT_QUEUE, where the tri-scale-verification contract applies).
-# r17 plan: NEXT_QUEUE r16 additions (never-scored) first, then these
-# — the last 12 of the r8-scored cohort followed by a registration-
-# order prefix of the 48 r9-scored qids, sized so NEXT + REFRESH + 2
-# canaries = 50 exactly (each wave-9+ addition on NEXT_QUEUE drops one
-# r9 tail entry here). The r9-scored qids left off the queue are age
-# 17 - 9 = 8 < bound at N >= 385 during the r17 build, inside the
-# staleness invariant; they lead the r18 queue.
-REFRESH_QUEUE: list[str] = [
-    # the last 12 of the r8-scored cohort, registration order
-    "c_sql_q1",
-    "c_sql_q2",
-    "c_sql_q6",
-    "c_sql_q7",
-    "c_sql_q8",
-    "c_sql_q9",
-    "c_sql_q11",
-    "c_sql_q12",
-    "c_sql_q16",
-    "c_sql_q20",
-    "a_scan_orc",
-    "a_pysrc_replay",
-    # the first 16 of the 48 r9-scored qids, registration order
-    # (tail r9-scored entries are dropped one-for-one as wave-9+
-    # additions land on NEXT_QUEUE: dropped qids are not yet stale
-    # under the max(4, ceil(N/48)) bound and lead the r18 queue)
-]
+
+def correctness_rounds() -> dict[int, set[str]]:
+    """The qids with a driver row in each CORRECTNESS_r{N}.json, keyed
+    by N (rows-only "no_oracle" rows count: the qid ran)."""
+    return {
+        int(path.stem.rsplit("_r", 1)[1]): set(json.loads(path.read_text()))
+        for path in _REPO.glob("CORRECTNESS_r*.json")
+    }
+
+
+def scored_window(qids: list[str], rounds: dict[int, set[str]]) -> list[str]:
+    """The WINDOW qids the driver should score next, out of ``qids``
+    (registration order): the canaries at both ends, and between them
+    the qids sorted by the newest round in ``rounds`` with a row for
+    them, never-scored ones as round -1. The sort is stable, so ties
+    keep registration order."""
+    latest = {q: rnd for rnd in sorted(rounds) for q in rounds[rnd]}
+    middle = sorted((q for q in qids if q not in CANARIES), key=lambda q: latest.get(q, -1))
+    return [CANARIES[0], *middle[: WINDOW - len(CANARIES)], CANARIES[1]]
+
 
 def driver_ordered(d: dict) -> dict:
-    """Reorder a registry view so DRIVER_ORDER qids come first (in that
-    order), followed by the rest in registration order. Unknown names in
-    DRIVER_ORDER are skipped, so the list may reference qids that a
-    partial import has not registered."""
-    head = {q: d[q] for q in DRIVER_ORDER if q in d}
+    """Reorder a registry view so the scored window comes first,
+    followed by the rest in registration order. The window is chosen
+    over all of QUERIES, so views of different subsets (ORACLE) share
+    one head order; names missing from ``d`` are skipped."""
+    head = {q: d[q] for q in scored_window(list(QUERIES), correctness_rounds()) if q in d}
     return head | {q: v for q, v in d.items() if q not in head}

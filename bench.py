@@ -139,6 +139,18 @@ def _gate_rc(n_flags: int, gate_mode: str) -> int:
     return 1 if (n_flags and gate_mode == "strict") else 0
 
 
+def _warn_unknown_gate_mode(gate_mode: str) -> None:
+    """The legacy SPARK_GRAFT_BENCH_GATE=on (a hard stop before r16) and
+    any other unknown value run warn-only, like the default. Say so on
+    stderr, so a caller that expects rc=1 on a flag sees the change."""
+    if gate_mode not in ("warn", "strict", "off"):
+        print(
+            f"BENCH-WARN SPARK_GRAFT_BENCH_GATE={gate_mode!r} runs the gate "
+            "warn-only (rc=0 on flags); set it to strict for a hard stop",
+            file=sys.stderr,
+        )
+
+
 def _record(
     timings: dict[str, float],
     sf: float,
@@ -305,6 +317,7 @@ def main() -> None:
     # on stderr); SPARK_GRAFT_BENCH_GATE=strict restores sys.exit(1)
     # for builder A/B loops that want a hard stop.
     gate_mode = os.environ.get("SPARK_GRAFT_BENCH_GATE", "warn")
+    _warn_unknown_gate_mode(gate_mode)
     slow: list[tuple[str, float, float]] = []
     if sf == 0.1 and gate_mode != "off":
         ref = _reference()

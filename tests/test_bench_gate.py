@@ -169,6 +169,22 @@ def test_gate_detects_synthetic_2x_slowdown_but_default_rc_is_zero():
     assert 'os.environ.get("SPARK_GRAFT_BENCH_GATE", "warn")' in src
 
 
+def test_legacy_or_unknown_gate_mode_warns_on_stderr(capsys):
+    """SPARK_GRAFT_BENCH_GATE=on used to be the hard stop (before r16).
+    It now runs warn-only like any unknown value, so the bench prints
+    one stderr line naming strict as the hard stop. The rc is unchanged
+    (the test above pins _gate_rc(3, "on") == 0)."""
+    b = _bench_module()
+    for mode in ("on", "hard"):
+        b._warn_unknown_gate_mode(mode)
+        err = capsys.readouterr().err
+        assert err.count("\n") == 1
+        assert repr(mode) in err and "warn-only" in err and "strict" in err
+    for mode in ("warn", "strict", "off"):
+        b._warn_unknown_gate_mode(mode)
+        assert capsys.readouterr().err == ""
+
+
 def test_record_field_order_survives_tail_truncation():
     """r16 VERDICT item 2: the one-line JSON must keep its decisive
     fields at the END so the driver's tail-truncating capture retains

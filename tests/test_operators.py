@@ -440,8 +440,13 @@ def test_query_vector_and_panel_fall_back_to_spark_on_unreadable_path(spark, mon
     """ADVICE r16: the driver-side pyarrow reads in query_vector /
     query_panel must degrade to the pre-r16 bounded Spark job on a
     non-local sf_dir (pyarrow only reads local paths) — and the fallback
-    must return value-identical tuples."""
+    must return value-identical tuples. Both failure shapes are
+    simulated: OSError for an unreadable path, and ArrowInvalid (a
+    ValueError) for a URI scheme pyarrow does not know, e.g. wasbs://."""
     from tests.conftest import SF_DIR
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from aprsdb_spark.operators import similarity as sim
 
@@ -452,13 +457,16 @@ def test_query_vector_and_panel_fall_back_to_spark_on_unreadable_path(spark, mon
     sim.query_vector.cache_clear()
     sim.query_panel.cache_clear()
 
-    import pyarrow.parquet as pq
+    for err in (
+        OSError("simulated unreadable sf_dir"),
+        pa.ArrowInvalid("Expected a local filesystem path, got a URI: 'wasbs://x'"),
+    ):
 
-    def _boom(*a, **k):
-        raise OSError("simulated remote sf_dir URI")
+        def _boom(*a, _err=err, **k):
+            raise _err
 
-    monkeypatch.setattr(pq, "read_table", _boom)
-    assert sim.query_vector(SF_DIR) == via_arrow_vec
-    assert sim.query_panel(SF_DIR, 16, with_label=True) == via_arrow_panel
-    sim.query_vector.cache_clear()
-    sim.query_panel.cache_clear()
+        monkeypatch.setattr(pq, "read_table", _boom)
+        assert sim.query_vector(SF_DIR) == via_arrow_vec
+        assert sim.query_panel(SF_DIR, 16, with_label=True) == via_arrow_panel
+        sim.query_vector.cache_clear()
+        sim.query_panel.cache_clear()

@@ -1,133 +1,88 @@
 """The driver scores exactly the first 50 entries of queries() and stops
-(every CORRECTNESS_r0N.json ends at registry position 50). These tests
-pin the rotation invariant: every qid that has never received a driver
-CORRECTNESS row must sit inside that scored window, or it can never be
-verified by the hard signal. NEVER_SCORED is DERIVED from the recorded
-artifacts (union of CORRECTNESS_r0*.json vs the registry), not
-hand-maintained — the r3 and r4 rotations were both hand-edited and both
-went stale within a round.
+(every CORRECTNESS_r{N}.json ends at registry position 50). The window
+is derived from those committed files (registry.scored_window), so these
+tests pin the rule's outcome against the evidence: never-scored and
+stale qids are inside it, and replaying the rule on older rounds gives
+the window the driver actually scored.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-
 import math
 
 import __spark_entry__ as entry_mod
-from aprsdb_spark.registry import DRIVER_ORDER, NEXT_QUEUE, REFRESH_QUEUE
-
-_REPO = os.path.join(os.path.dirname(__file__), "..")
+from aprsdb_spark.registry import CANARIES, QUERIES, correctness_rounds, scored_window
 
 
-def _rounds() -> dict[str, dict]:
-    """Per-round driver CORRECTNESS rows, keyed by round number."""
-    out: dict[int, dict] = {}
-    # 'r*' not 'r0*': a zero-padded glob stops matching at round 10
-    for fname in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(fname).split("_r")[1].split(".")[0])
-        with open(fname) as f:
-            out[rnd] = json.load(f)
-    return out
+def _first50() -> list[str]:
+    return list(entry_mod.queries())[:50]
 
 
 def _scored_ever() -> set[str]:
-    """Every qid with a driver CORRECTNESS row in any recorded round
-    (rows-only "no_oracle" rows count — the qid ran under the driver)."""
-    scored: set[str] = set()
-    for rows in _rounds().values():
-        scored |= set(rows)
-    return scored
+    """Every qid with a driver CORRECTNESS row in any recorded round."""
+    return set().union(*correctness_rounds().values())
 
 
 def test_never_scored_qids_fit_the_driver_window():
-    """A never-scored qid must be in the scored window OR on the
-    explicit NEXT_QUEUE (added after this round's window was frozen,
-    tri-scale-verified locally, first for the next rotation) — nothing
-    waits silently."""
+    """A qid with no driver row yet must be in the scored window, or it
+    can never be verified by the hard signal."""
     never_scored = set(entry_mod.queries()) - _scored_ever()
-    first50 = list(entry_mod.queries())[:50]
-    missing = never_scored - set(first50) - set(NEXT_QUEUE)
+    missing = never_scored - set(_first50())
     assert not missing, f"qids outside the driver's scored window: {sorted(missing)}"
-    stale_queue = set(NEXT_QUEUE) & _scored_ever()
-    assert not stale_queue, (
-        f"NEXT_QUEUE entries already driver-scored — rotate them into "
-        f"DRIVER_ORDER and clear the queue: {sorted(stale_queue)}"
-    )
 
 
 def test_no_qid_waits_beyond_rotation_capacity():
-    """Rotation-age bound, derived from capacity: the scored window has
-    48 non-canary slots, so full re-coverage of N registered qids takes
-    ceil(N/48) rounds — the bound a perfect round-robin achieves. (The
-    original hardcoded 4 was that formula evaluated at 181 qids; it
-    went red at 246 because the registry outgrew it, not because
-    rotation stalled.) Any qid whose latest driver row is that many
-    rounds older than the newest recorded round must be IN the current
-    window (about to be rescored) or on an explicit queue
-    (NEXT_QUEUE for never-scored additions, REFRESH_QUEUE for scored
-    qids displaced by them) — staleness is an executable invariant,
-    not a judgement call at verdict time."""
-    rounds = _rounds()
+    """Rotation-age bound, derived from capacity: the window has 48
+    non-canary slots, so re-scoring all N registered qids takes
+    ceil(N/48) rounds. A qid whose newest driver row is that many
+    rounds older than the newest recorded round must be in the window."""
+    rounds = correctness_rounds()
     newest = max(rounds)
-    latest: dict[str, int] = {}
-    for rnd, rows in sorted(rounds.items()):
-        for q in rows:
-            latest[q] = rnd
-    bound = max(4, math.ceil(len(entry_mod.queries()) / 48))
-    first50 = set(list(entry_mod.queries())[:50])
-    stale = {
-        q
-        for q, rnd in latest.items()
-        if newest - rnd >= bound and q in entry_mod.queries()
-    }
-    waiting = stale - first50 - set(NEXT_QUEUE) - set(REFRESH_QUEUE)
+    latest = {q: rnd for rnd in sorted(rounds) for q in rounds[rnd]}
+    qs = entry_mod.queries()
+    bound = max(4, math.ceil(len(qs) / 48))
+    stale = {q for q, rnd in latest.items() if newest - rnd >= bound and q in qs}
+    waiting = stale - set(_first50())
     assert not waiting, (
         f"qids whose latest driver row is >={bound} rounds old and are "
-        f"not scheduled for rescoring: {sorted(waiting)}"
-    )
-
-
-def test_refresh_queue_holds_only_scored_overflow():
-    """REFRESH_QUEUE is for already-driver-scored qids displaced from
-    the window by never-scored additions: every entry must be scored
-    (never-scored ones belong on NEXT_QUEUE, which carries the
-    tri-scale-verification contract), registered, outside the current
-    window (inside it the queue entry would be stale), and the two
-    queues must be disjoint. Queue + canaries must also FIT the next
-    window — a queue bigger than the window is a promise that cannot
-    be kept."""
-    scored = _scored_ever()
-    qs = entry_mod.queries()
-    unscored = [q for q in REFRESH_QUEUE if q not in scored]
-    assert not unscored, f"never-scored qids on REFRESH_QUEUE: {unscored}"
-    unknown = [q for q in REFRESH_QUEUE if q not in qs]
-    assert not unknown, f"REFRESH_QUEUE names unregistered qids: {unknown}"
-    first50 = set(list(qs)[:50])
-    inside = [q for q in REFRESH_QUEUE if q in first50]
-    assert not inside, f"REFRESH_QUEUE entries already in the window: {inside}"
-    assert not set(REFRESH_QUEUE) & set(NEXT_QUEUE)
-    assert len(REFRESH_QUEUE) == len(set(REFRESH_QUEUE))
-    assert len(NEXT_QUEUE) + len(REFRESH_QUEUE) <= 48, (
-        "queued work exceeds one window's 48 non-canary slots"
+        f"not in the scored window: {sorted(waiting)}"
     )
 
 
 def test_artifacts_exist_so_derivation_is_meaningful():
-    # _scored_ever() returning empty would vacuously pass the window test
-    # for the wrong reason (e.g. the glob broke after a file rename)
+    # an empty evidence set would put only never-scored qids in the
+    # window and vacuously pass the tests above (e.g. a broken glob)
+    rounds = correctness_rounds()
+    assert len(rounds) >= 17, f"only rounds {sorted(rounds)} found — artifact glob broken?"
     scored = _scored_ever()
     assert len(scored) >= 100, f"only {len(scored)} scored qids found — artifact glob broken?"
 
 
-def test_driver_order_has_no_unknown_or_duplicate_qids():
-    qs = entry_mod.queries()
-    unknown = [q for q in DRIVER_ORDER if q not in qs]
-    assert not unknown, f"DRIVER_ORDER names unregistered qids: {unknown}"
-    assert len(DRIVER_ORDER) == len(set(DRIVER_ORDER)), "duplicates in DRIVER_ORDER"
-    assert len(DRIVER_ORDER) <= 50, "DRIVER_ORDER exceeds the scored window"
+def test_scored_window_is_50_distinct_registered_qids_between_canaries():
+    head = _first50()
+    assert head[0] == CANARIES[0] and head[-1] == CANARIES[1]
+    assert len(set(head)) == 50
+    assert set(head) <= set(QUERIES)
+
+
+def test_rule_replays_the_r16_window():
+    """The rule, given only the evidence up to r15 and the qids the
+    driver had scored by r16 (in registration order), picks exactly the
+    50 qids CORRECTNESS_r16.json holds. Checked against evidence, not
+    against any hand-kept list."""
+    rounds = correctness_rounds()
+    scored_by_r16 = set().union(*(rows for rnd, rows in rounds.items() if rnd <= 16))
+    qids = [q for q in QUERIES if q in scored_by_r16]
+    older = {rnd: rows for rnd, rows in rounds.items() if rnd <= 15}
+    assert set(scored_window(qids, older)) == rounds[16]
+
+
+def test_window_does_not_depend_on_cwd(tmp_path, monkeypatch):
+    """The driver imports the package from a temp dir: the evidence is
+    found from the package's location, not the working directory."""
+    head = _first50()
+    monkeypatch.chdir(tmp_path)
+    assert _first50() == head
 
 
 def test_queries_and_oracle_share_the_rotation():
