@@ -263,11 +263,14 @@ def j_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s")
         )
     )
-    # r17: the self-join references enc TWICE — persist so the encode
-    # pass (explode + vocab join + order-explicit concat agg) computes
-    # once, not once per join side (guide §5 persist-when-reused; the
-    # |docs|-row encoded frame is far smaller than its explode input)
-    enc.persist()
+    # the self-join references enc TWICE — materialize it with an EAGER
+    # local checkpoint so the encode pass (explode + vocab join +
+    # order-explicit concat agg) computes once, not once per join side.
+    # The |docs|-row encoded frame is far smaller than its explode
+    # input, and unlike persist() it leaves no CacheManager entry behind
+    # the qid: checkpoint blocks are context-cleaned on GC (the
+    # j_bfs_distance rule). The pair join stays lazy on top of it.
+    enc = enc.localCheckpoint(eager=True)
     a = enc.select(
         "lang", "source", F.col("doc_id").alias("id_a"), F.col("s").alias("sa")
     )

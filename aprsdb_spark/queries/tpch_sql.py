@@ -345,26 +345,33 @@ def c_sql_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q1.format(p="v_"))
 
 
-_Q2 = """
+# Filter predicates shared by the base queries (the oracle form) and
+# their _SPARK prefilters: interpolated into both, so a prefilter can
+# never drift from the WHERE clause it is proven equivalent to.
+_Q2_PART = "p_size <= 10 AND p_type = 'LARGE'"
+_EUROPE = "r_name = 'EUROPE'"
+_BOLT = "p_name LIKE '%bolt%'"
+
+_Q2 = f"""
     WITH ps AS (
       SELECT l_partkey, l_suppkey,
              MIN(CAST(l_extendedprice AS DECIMAL(12,2))) AS supplycost
-      FROM {p}lineitem GROUP BY l_partkey, l_suppkey)
+      FROM {{p}}lineitem GROUP BY l_partkey, l_suppkey)
     SELECT s_acctbal, s_name, n_name AS nation, p_partkey, p_brand,
            CAST(ps.supplycost AS DOUBLE) AS supplycost
     FROM ps
-    JOIN {p}part ON p_partkey = ps.l_partkey
-    JOIN {p}supplier ON s_suppkey = ps.l_suppkey
-    JOIN {p}nation ON s_nationkey = n_nationkey
-    JOIN {p}region ON n_regionkey = r_regionkey
-    WHERE p_size <= 10 AND p_type = 'LARGE' AND r_name = 'EUROPE'
+    JOIN {{p}}part ON p_partkey = ps.l_partkey
+    JOIN {{p}}supplier ON s_suppkey = ps.l_suppkey
+    JOIN {{p}}nation ON s_nationkey = n_nationkey
+    JOIN {{p}}region ON n_regionkey = r_regionkey
+    WHERE {_Q2_PART} AND {_EUROPE}
       AND ps.supplycost = (
             SELECT MIN(ps2.supplycost)
             FROM ps ps2
-            JOIN {p}supplier s2 ON s2.s_suppkey = ps2.l_suppkey
-            JOIN {p}nation n2 ON s2.s_nationkey = n2.n_nationkey
-            JOIN {p}region r2 ON n2.n_regionkey = r2.r_regionkey
-            WHERE ps2.l_partkey = p_partkey AND r2.r_name = 'EUROPE')
+            JOIN {{p}}supplier s2 ON s2.s_suppkey = ps2.l_suppkey
+            JOIN {{p}}nation n2 ON s2.s_nationkey = n2.n_nationkey
+            JOIN {{p}}region r2 ON n2.n_regionkey = r2.r_regionkey
+            WHERE ps2.l_partkey = p_partkey AND r2.{_EUROPE})
     ORDER BY s_acctbal DESC, nation, s_name, p_partkey
     LIMIT 100
 """
@@ -383,15 +390,15 @@ _Q2 = """
 # keeps the AQE exchange reuse across both consumers.
 _Q2_SPARK = _Q2.replace(
     "FROM {p}lineitem GROUP BY l_partkey, l_suppkey",
-    """FROM {p}lineitem
+    f"""FROM {{p}}lineitem
       WHERE l_suppkey IN
-          (SELECT s_suppkey FROM {p}supplier
-           JOIN {p}nation ON s_nationkey = n_nationkey
-           JOIN {p}region ON n_regionkey = r_regionkey
-           WHERE r_name = 'EUROPE')
+          (SELECT s_suppkey FROM {{p}}supplier
+           JOIN {{p}}nation ON s_nationkey = n_nationkey
+           JOIN {{p}}region ON n_regionkey = r_regionkey
+           WHERE {_EUROPE})
         AND l_partkey IN
-          (SELECT p_partkey FROM {p}part
-           WHERE p_size <= 10 AND p_type = 'LARGE')
+          (SELECT p_partkey FROM {{p}}part
+           WHERE {_Q2_PART})
       GROUP BY l_partkey, l_suppkey""",
 )
 # A drifted anchor must fail at import, not silently fall back to the
@@ -563,18 +570,18 @@ def c_sql_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q9.format(p="v_"))
 
 
-_Q11 = """
+_Q11 = f"""
     WITH ps AS (
       SELECT l_partkey, l_suppkey,
              SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS val
-      FROM {p}lineitem GROUP BY l_partkey, l_suppkey),
+      FROM {{p}}lineitem GROUP BY l_partkey, l_suppkey),
     natps AS (
       SELECT ps.l_partkey, ps.val
       FROM ps
-      JOIN {p}supplier ON s_suppkey = ps.l_suppkey
-      JOIN {p}nation ON s_nationkey = n_nationkey
-      JOIN {p}region ON n_regionkey = r_regionkey
-      WHERE r_name = 'EUROPE')
+      JOIN {{p}}supplier ON s_suppkey = ps.l_suppkey
+      JOIN {{p}}nation ON s_nationkey = n_nationkey
+      JOIN {{p}}region ON n_regionkey = r_regionkey
+      WHERE {_EUROPE})
     SELECT l_partkey AS ps_partkey,
            FLOOR(CAST(SUM(val) AS DOUBLE) * 100 + 0.5) / 100 AS value
     FROM natps
@@ -598,12 +605,12 @@ _Q11 = """
 # the HAVING scalars is unaffected — the prefilter sits below it.
 _Q11_SPARK = _Q11.replace(
     "FROM {p}lineitem GROUP BY l_partkey, l_suppkey",
-    """FROM {p}lineitem
+    f"""FROM {{p}}lineitem
       WHERE l_suppkey IN
-          (SELECT s_suppkey FROM {p}supplier
-           JOIN {p}nation ON s_nationkey = n_nationkey
-           JOIN {p}region ON n_regionkey = r_regionkey
-           WHERE r_name = 'EUROPE')
+          (SELECT s_suppkey FROM {{p}}supplier
+           JOIN {{p}}nation ON s_nationkey = n_nationkey
+           JOIN {{p}}region ON n_regionkey = r_regionkey
+           WHERE {_EUROPE})
       GROUP BY l_partkey, l_suppkey""",
 )
 assert _Q11_SPARK != _Q11, "_Q11_SPARK: rollup anchor not found in _Q11"
@@ -691,7 +698,7 @@ def c_sql_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q16.format(p="v_"))
 
 
-_Q20 = """
+_Q20 = f"""
     WITH shipped AS (
       SELECT l_partkey, l_suppkey,
              SUM(CAST(l_quantity AS DECIMAL(12,2))) AS total_qty,
@@ -699,14 +706,14 @@ _Q20 = """
                        AND l_shipdate <  TIMESTAMP '1998-01-01'
                       THEN CAST(l_quantity AS DECIMAL(12,2))
                       ELSE CAST(0 AS DECIMAL(12,2)) END) AS qty_1997
-      FROM {p}lineitem GROUP BY l_partkey, l_suppkey)
+      FROM {{p}}lineitem GROUP BY l_partkey, l_suppkey)
     SELECT s_name, n_name AS nation
-    FROM {p}supplier
-    JOIN {p}nation ON s_nationkey = n_nationkey
+    FROM {{p}}supplier
+    JOIN {{p}}nation ON s_nationkey = n_nationkey
     WHERE s_suppkey IN (
         SELECT sh.l_suppkey
-        FROM shipped sh JOIN {p}part ON p_partkey = sh.l_partkey
-        WHERE p_name LIKE '%bolt%'
+        FROM shipped sh JOIN {{p}}part ON p_partkey = sh.l_partkey
+        WHERE {_BOLT}
           AND sh.qty_1997 * 2 > sh.total_qty)
     ORDER BY s_name
 """
@@ -725,9 +732,9 @@ _Q20 = """
 # ~12% of lineitem (74k of 600k rows at sf0.1) instead of all of it.
 _Q20_SPARK = _Q20.replace(
     "FROM {p}lineitem GROUP BY l_partkey, l_suppkey",
-    """FROM {p}lineitem
+    f"""FROM {{p}}lineitem
       WHERE l_partkey IN
-          (SELECT p_partkey FROM {p}part WHERE p_name LIKE '%bolt%')
+          (SELECT p_partkey FROM {{p}}part WHERE {_BOLT})
       GROUP BY l_partkey, l_suppkey""",
 )
 assert _Q20_SPARK != _Q20, "_Q20_SPARK: rollup anchor not found in _Q20"

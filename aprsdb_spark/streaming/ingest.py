@@ -260,28 +260,65 @@ def _last_applied_batch(stations_dir: str, run_key: str) -> int:
     return last
 
 
-def _recover_incomplete_swap(spark: SparkSession, state_dir: str) -> None:
-    """Complete a swap that crashed mid-overwrite of ``state_dir``.
+def _publish(spark: SparkSession, state_dir: str) -> None:
+    """Make ``state_dir`` the committed state in `<dir>_next` by hard
+    link: no bytes copied, no Spark job.
 
-    The overwrite sinks write the merged state to `<dir>_next` first
-    (committer-atomic: `_SUCCESS` appears only on commit), then copy
-    `_next` over the main dir. A crash DURING that second write leaves
-    the main dir partial — and, with the embedded replay marker, its
-    surviving rows already carry the new batch_id, so a naive retry
-    would skip the batch and freeze truncated state. Recovery is
-    deterministic because `_next` still holds the complete intended
-    state: if the main dir lacks `_SUCCESS` while `_next` has one,
-    redo the copy before anything reads the state. Runs at the top of
-    every overwrite sink; a completed main dir makes it a no-op stat
-    call."""
+    The order keeps a crash at any point recoverable: `_next` must have
+    the committer's `_SUCCESS`; the main dir loses its `_SUCCESS` first,
+    then its other files; `_next`'s files are linked in with
+    `._SUCCESS.crc` and `_SUCCESS` last. Until then the main dir has no
+    `_SUCCESS` beside a complete `_next` — what _recover_incomplete_swap
+    redoes, and where _last_applied_batch distrusts the embedded marker.
+    Spark never rewrites a file in place, so the inodes shared with
+    `_next` never change. Links need a local file system (the markers
+    already did: os.path, a local pyarrow scan); other paths fail here."""
+    import os
+    import shutil
+
+    nxt = state_dir + "_next"
+    if not os.path.exists(os.path.join(nxt, "_SUCCESS")):
+        raise RuntimeError(f"refusing to publish {nxt}: no _SUCCESS (uncommitted or not local)")
+    marker = os.path.join(state_dir, "_SUCCESS")
+    if os.path.exists(marker):
+        os.remove(marker)
+    if os.path.isdir(state_dir):
+        shutil.rmtree(state_dir)
+    os.mkdir(state_dir)
+    last = ["._SUCCESS.crc", "_SUCCESS"]
+    names = os.listdir(nxt)
+    for name in [n for n in names if n not in last] + [n for n in last if n in names]:
+        os.link(os.path.join(nxt, name), os.path.join(state_dir, name))
+    # as Spark's own overwrite does on commit: cached plans over the path
+    # (a view's persist) re-read the new files, never the old state
+    spark.catalog.refreshByPath(state_dir)
+
+
+def _write_state(df: DataFrame, state_dir: str) -> None:
+    """The overwrite sinks' state write: commit ``df`` to `<dir>_next`,
+    then _publish it over the main dir."""
+    df.write.mode("overwrite").parquet(state_dir + "_next")
+    _publish(df.sparkSession, state_dir)
+
+
+def _recover_incomplete_swap(spark: SparkSession, state_dir: str) -> None:
+    """Finish a publish that crashed part-way through.
+
+    Such a crash leaves the main dir without `_SUCCESS`, maybe holding
+    some new links whose rows already carry the new batch_id — a naive
+    retry would skip the batch and freeze truncated state. `_next`
+    still holds the complete state, so redo the publish before anything
+    reads it. (A crash during the `_next` write leaves the main dir
+    intact.) Runs at the top of every overwrite sink and in the views;
+    a completed main dir makes it two stat calls."""
     import os
 
     nxt = state_dir + "_next"
     if not os.path.exists(os.path.join(nxt, "_SUCCESS")):
         return  # no completed staging state to recover from
     if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-        return  # last swap completed; _next is just the previous staging
-    spark.read.parquet(nxt).write.mode("overwrite").parquet(state_dir)
+        return  # last publish completed; _next is the same state
+    _publish(spark, state_dir)
 
 
 def _record_applied_batch(stations_dir: str, run_key: str, batch_id: int) -> None:
@@ -320,48 +357,40 @@ def upsert_stations_sink(
     double-counts, so pass ``run_key`` (the query's checkpoint path —
     batch_ids are only unique per checkpoint) and the sink records the
     last applied (run_key, batch_id) in a sidecar
-    (`<dir>_meta/last_batch.json`, written after the swap) and skips any
+    (`<dir>_meta/last_batch.json`, written after the publish) and skips any
     batch_id <= it for the same run_key — the standard
     "transactional-ish" foreachBatch recipe. A different run_key is a
     deliberate reprocessing run and always applies. With run_key=None
     the guard is off (at-least-once, replay inflates n_packets).
     The marker is ALSO embedded in the state rows (_with_marker), so it
-    commits atomically with the data — a crash between the swap and the
-    sidecar write (the r7 ADVICE window) no longer re-applies; see
-    _last_applied_batch."""
+    commits atomically with the data — a crash between the publish and
+    the sidecar write (the r7 ADVICE window) no longer re-applies; see
+    _last_applied_batch. State is published by hard link (_publish), so
+    keep ``stations_dir`` on a local file system."""
     spark = batch.sparkSession
     _recover_incomplete_swap(spark, stations_dir)
     if run_key is not None and batch_id <= _last_applied_batch(stations_dir, run_key):
         return
-    agg = (
-        batch.where(F.col("src").isNotNull())
-        .groupBy("src")
-        .agg(
-            F.max("recv_ts").alias("last_heard"),
-            F.count("*").alias("n_packets"),
-            F.max_by("latitude", "recv_ts").alias("last_lat"),
-            F.max_by("longitude", "recv_ts").alias("last_lon"),
-        )
+    # each packet is a one-packet partial of a stored row, so state and
+    # batch fold in ONE aggregation (one shuffle) with the same result
+    part = batch.where(F.col("src").isNotNull()).select(
+        "src",
+        F.col("recv_ts").alias("last_heard"),
+        F.lit(1).cast("long").alias("n_packets"),
+        F.col("latitude").alias("last_lat"),
+        F.col("longitude").alias("last_lon"),
     )
     existing = _read_state_or_none(spark, stations_dir)
-    if existing is not None:
-        merged = (
-            existing.unionByName(agg)
-            .groupBy("src")
-            .agg(
-                F.max("last_heard").alias("last_heard"),
-                F.sum("n_packets").alias("n_packets"),
-                F.max_by("last_lat", "last_heard").alias("last_lat"),
-                F.max_by("last_lon", "last_heard").alias("last_lon"),
-            )
-        )
-    else:
-        merged = agg
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        stations_dir + "_next"
+    rows = part if existing is None else existing.unionByName(part)
+    merged = rows.groupBy("src").agg(
+        F.max("last_heard").alias("last_heard"),
+        F.sum("n_packets").alias("n_packets"),
+        F.max_by("last_lat", "last_heard").alias("last_lat"),
+        F.max_by("last_lon", "last_heard").alias("last_lon"),
     )
-    # atomic-ish swap via overwrite of the main dir
-    spark.read.parquet(stations_dir + "_next").write.mode("overwrite").parquet(stations_dir)
+    # one file, not one per shuffle partition: a row per callsign is small,
+    # and the publish keeps _next's layout (the old copy compacted it)
+    _write_state(_with_marker(merged, run_key, batch_id).coalesce(1), stations_dir)
     if run_key is not None:
         _record_applied_batch(stations_dir, run_key, batch_id)
 
@@ -412,14 +441,11 @@ def incremental_rollup_sink(
         )
     else:
         merged = part
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    # the swap read re-validates _next: a corrupt/partial _next fails
-    # here and propagates (a retry before the swap sees the old state
-    # intact; a retry AFTER a completed swap is caught by the marker
-    # embedded in the state rows — _last_applied_batch)
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
+    # _publish refuses a _next without _SUCCESS: a failed staging write
+    # propagates and its retry sees the old state intact; a retry AFTER
+    # a completed publish is caught by the marker embedded in the state
+    # rows (_last_applied_batch)
+    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
     if run_key is not None:
         _record_applied_batch(state_dir, run_key, batch_id)
 
@@ -482,10 +508,7 @@ def cdc_apply_sink(
         F.col("last.op").alias("op"),
         "n_changes",
     )
-    _with_marker(flat, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
+    _write_state(_with_marker(flat, run_key, batch_id), state_dir)
     if run_key is not None:
         _record_applied_batch(state_dir, run_key, batch_id)
 
@@ -709,10 +732,7 @@ def leakage_monitor_sink(
             prior_alerts.select("h", "split"), ["h", "split"], "left_anti"
         )
     crossed.write.mode("append").parquet(alerts_dir)
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
+    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
     if run_key is not None:
         _record_applied_batch(state_dir, run_key, batch_id)
 
@@ -778,10 +798,7 @@ def drift_monitor_sink(
         if existing is not None
         else part
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
+    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
     if run_key is not None:
         _record_applied_batch(state_dir, run_key, batch_id)
 
@@ -841,10 +858,7 @@ def quality_gate_sink(
         if existing is not None
         else part
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
+    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
     if run_key is not None:
         _record_applied_batch(state_dir, run_key, batch_id)
 
@@ -910,10 +924,7 @@ def card_monitor_sink(
             if existing is not None
             else part
         )
-        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-            d + "_next"
-        )
-        spark.read.parquet(d + "_next").write.mode("overwrite").parquet(d)
+        _write_state(_with_marker(merged, run_key, batch_id), d)
         if run_key is not None:
             _record_applied_batch(d, run_key, batch_id)
 
@@ -982,10 +993,7 @@ def cms_monitor_sink(
                 if existing is not None
                 else part
             )
-            _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-                d + "_next"
-            )
-            spark.read.parquet(d + "_next").write.mode("overwrite").parquet(d)
+            _write_state(_with_marker(merged, run_key, batch_id), d)
             if run_key is not None:
                 _record_applied_batch(d, run_key, batch_id)
     finally:
@@ -1041,12 +1049,7 @@ def hll_monitor_sink(
             if existing is not None
             else part
         )
-        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-            regs_dir + "_next"
-        )
-        spark.read.parquet(regs_dir + "_next").write.mode("overwrite").parquet(
-            regs_dir
-        )
+        _write_state(_with_marker(merged, run_key, batch_id), regs_dir)
         if run_key is not None:
             _record_applied_batch(regs_dir, run_key, batch_id)
 
@@ -1059,12 +1062,7 @@ def hll_monitor_sink(
         merged = (
             existing.unionByName(part).distinct() if existing is not None else part
         )
-        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-            users_dir + "_next"
-        )
-        spark.read.parquet(users_dir + "_next").write.mode("overwrite").parquet(
-            users_dir
-        )
+        _write_state(_with_marker(merged, run_key, batch_id), users_dir)
         if run_key is not None:
             _record_applied_batch(users_dir, run_key, batch_id)
 
@@ -1138,10 +1136,7 @@ def ivf_occupancy_sink(
         if existing is not None
         else part
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
+    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
     if run_key is not None:
         _record_applied_batch(state_dir, run_key, batch_id)
 
@@ -1260,12 +1255,7 @@ def lateness_monitor_sink(
             if existing is not None
             else part
         )
-        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-            panel_dir + "_next"
-        )
-        spark.read.parquet(panel_dir + "_next").write.mode("overwrite").parquet(
-            panel_dir
-        )
+        _write_state(_with_marker(merged, run_key, batch_id), panel_dir)
         if run_key is not None:
             _record_applied_batch(panel_dir, run_key, batch_id)
     # watermark SECOND: monotone max(stored, batch max - delay)
@@ -1275,13 +1265,13 @@ def lateness_monitor_sink(
                 if v is not None]
         new_wm = max(cand) if cand else None
         if new_wm is not None:
-            _with_marker(
-                spark.createDataFrame([(int(new_wm),)], "wm_ms long"),
-                run_key,
-                batch_id,
-            ).write.mode("overwrite").parquet(wm_dir + "_next")
-            spark.read.parquet(wm_dir + "_next").write.mode("overwrite").parquet(
-                wm_dir
+            _write_state(
+                _with_marker(
+                    spark.createDataFrame([(int(new_wm),)], "wm_ms long"),
+                    run_key,
+                    batch_id,
+                ),
+                wm_dir,
             )
         if run_key is not None:
             _record_applied_batch(wm_dir, run_key, batch_id)
@@ -1417,10 +1407,7 @@ def volume_monitor_sink(
         if existing is not None
         else part
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
+    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
     if run_key is not None:
         _record_applied_batch(state_dir, run_key, batch_id)
 
@@ -1507,10 +1494,7 @@ def lifetime_monitor_sink(
         if existing is not None
         else part
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
+    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
     if run_key is not None:
         _record_applied_batch(state_dir, run_key, batch_id)
 

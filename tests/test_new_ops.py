@@ -174,6 +174,20 @@ def test_edit_dedup_distances_are_true_token_levenshtein(spark):
                 assert (ida, idb) in reported, (ida, idb)
 
 
+def test_edit_dedup_leaves_no_cache_entry(spark, duck):
+    """j_dedup_edit materializes its encoded frame once for both join
+    sides; that must leave no CacheManager entry behind the qid (a
+    persist() there leaked one corpus-scale entry per call), and the
+    qid must still match its DuckDB oracle at sf0.01."""
+    from aprsdb_spark.registry import ORACLE
+    from tests.conftest import compare_query
+
+    spark.catalog.clearCache()
+    n = compare_query(spark, duck, QUERIES["j_dedup_edit"], ORACLE["j_dedup_edit"])
+    assert n > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # ------------------------------------------------------------ triangles
 
 

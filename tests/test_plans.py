@@ -370,6 +370,22 @@ def test_tpch_subquery_shapes_decorrelate(spark):
     )
 
 
+def test_tpch_prefilters_share_the_base_predicates():
+    """Q2/Q11/Q20's pushed-down prefilters interpolate the SAME
+    predicate constants as their base (oracle) queries, so the two
+    cannot drift apart: each constant sits in the base form and once
+    more in the Spark form."""
+    from aprsdb_spark.queries import tpch_sql as T
+
+    for base, pushed, preds in (
+        (T._Q2, T._Q2_SPARK, (T._Q2_PART, T._EUROPE)),
+        (T._Q11, T._Q11_SPARK, (T._EUROPE,)),
+        (T._Q20, T._Q20_SPARK, (T._BOLT,)),
+    ):
+        for pred in preds:
+            assert pred in base and pushed.count(pred) == base.count(pred) + 1
+
+
 def test_tpch_r7_family_shapes(spark):
     """The r7 completion batch (Q1/Q2/Q6/Q7/Q8/Q9/Q11/Q12/Q16/Q20):
     same no-nested-loop/no-cartesian spec, plus the shape facts that

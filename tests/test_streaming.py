@@ -720,6 +720,206 @@ def test_replay_guard_survives_crash_mid_swap(spark, tmp_path):
     } == want
 
 
+def _station_batch(spark, rows):
+    """A static stations-sink input: (src, recv_ts from epoch ms, lat, lon)."""
+    df = spark.createDataFrame(
+        rows, "src string, ms long, latitude double, longitude double"
+    )
+    return df.select(
+        "src", F.timestamp_millis("ms").alias("recv_ts"), "latitude", "longitude"
+    )
+
+
+_STATION_BATCHES = [
+    [("A", 1000, 10.0, 20.0), ("A", 3000, 11.0, 21.0), ("B", 2000, 30.0, 40.0),
+     (None, 5000, 1.0, 1.0)],
+    # A's latest packet has no position; B's newest row has no recv_ts
+    [("A", 5000, None, None), ("B", None, 99.0, 99.0), ("C", 4000, 50.0, 60.0)],
+    # B's packet is older than its stored one; D has only a null recv_ts
+    [("B", 1500, 31.0, 41.0), ("C", None, 70.0, 80.0), ("D", None, 1.0, 2.0)],
+]
+
+
+def _stations(spark, stations_dir):
+    return {
+        r.src: (r.last_heard, r.n_packets, r.last_lat, r.last_lon)
+        for r in spark.read.parquet(stations_dir).collect()
+    }
+
+
+def test_station_merge_equals_one_shot_recompute(spark, tmp_path):
+    """The stations sink folds each batch into the store in ONE
+    aggregation over state plus one-packet partials. Across three
+    batches with a null src, null recv_ts and a null position on the
+    latest packet, the stored state must equal a one-shot max /
+    count(*) / max_by over every row."""
+    stations_dir = str(tmp_path / "stations")
+    batches = [_station_batch(spark, rows) for rows in _STATION_BATCHES]
+    for i, b in enumerate(batches):
+        S.upsert_stations_sink(b, i, stations_dir, run_key="ck")
+    allrows = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    want = {
+        r.src: (r.last_heard, r.n_packets, r.last_lat, r.last_lon)
+        for r in allrows.where(F.col("src").isNotNull())
+        .groupBy("src")
+        .agg(
+            F.max("recv_ts").alias("last_heard"),
+            F.count("*").alias("n_packets"),
+            F.max_by("latitude", "recv_ts").alias("last_lat"),
+            F.max_by("longitude", "recv_ts").alias("last_lon"),
+        )
+        .collect()
+    }
+    assert _stations(spark, stations_dir) == want
+    assert want["A"][1:] == (3, None, None) and want["D"] == (None, 1, None, None)
+
+
+def test_station_sink_runs_two_jobs_on_existing_state(spark, tmp_path):
+    """One sink call on an existing store runs at most two Spark jobs:
+    the state's schema inference and the write to `_next`. The publish
+    is file links, not a Spark read-and-rewrite of `_next` (that copy
+    and its own schema inference made it four). AQE is off for the
+    count because it submits every shuffle map stage as a job of its
+    own."""
+    stations_dir = str(tmp_path / "stations")
+    S.upsert_stations_sink(
+        _station_batch(spark, _STATION_BATCHES[0]), 0, stations_dir, run_key="ck"
+    )
+    sc = spark.sparkContext
+    group = f"station-sink-{tmp_path.name}"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, "stations sink job count")
+    try:
+        S.upsert_stations_sink(
+            _station_batch(spark, _STATION_BATCHES[1]), 1, stations_dir, run_key="ck"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
+
+
+def test_station_publish_links_next_into_the_main_dir(spark, tmp_path):
+    """After a stations sink call every file of the main dir shares its
+    inode with `_next` (no bytes copied), and `_next` keeps its own
+    links — the staging dir the crash-mid-swap recovery reads. The
+    state is one data file, not one per shuffle partition."""
+    import os
+
+    stations_dir = str(tmp_path / "stations")
+    S.upsert_stations_sink(
+        _station_batch(spark, _STATION_BATCHES[0]), 0, stations_dir, run_key="ck"
+    )
+    nxt = stations_dir + "_next"
+    main = sorted(os.listdir(stations_dir))
+    assert main == sorted(os.listdir(nxt)) and "_SUCCESS" in main
+    assert sum(n.endswith(".parquet") for n in main) == 1, main
+    for name in main:
+        a = os.stat(os.path.join(stations_dir, name))
+        b = os.stat(os.path.join(nxt, name))
+        assert a.st_ino == b.st_ino and a.st_nlink == 2, name
+
+
+def test_publish_refuses_an_uncommitted_next(spark, tmp_path):
+    """_publish on a `_next` without `_SUCCESS` (a staging write that
+    never committed) raises and leaves the main dir exactly as it was."""
+    import os
+
+    stations_dir = str(tmp_path / "stations")
+    S.upsert_stations_sink(
+        _station_batch(spark, _STATION_BATCHES[0]), 0, stations_dir, run_key="ck"
+    )
+    want = _stations(spark, stations_dir)
+    os.remove(os.path.join(stations_dir + "_next", "_SUCCESS"))
+
+    def listing():
+        return {
+            n: os.stat(os.path.join(stations_dir, n)).st_ino
+            for n in os.listdir(stations_dir)
+        }
+
+    before = listing()
+    with pytest.raises(RuntimeError, match="_SUCCESS"):
+        S._publish(spark, stations_dir)
+    assert listing() == before
+    assert _stations(spark, stations_dir) == want
+
+
+def test_station_sink_fails_on_unreadable_store(spark, tmp_path):
+    """A store that exists but cannot be read fails the micro-batch (so
+    Structured Streaming retries it) instead of being taken for a first
+    batch: nothing is published over it, and `_next` still holds the
+    last committed state."""
+    import os
+
+    stations_dir = str(tmp_path / "stations")
+    S.upsert_stations_sink(
+        _station_batch(spark, _STATION_BATCHES[0]), 0, stations_dir, run_key="ck"
+    )
+    want = _stations(spark, stations_dir + "_next")
+    (data,) = [n for n in os.listdir(stations_dir) if n.endswith(".parquet")]
+    # a new inode: writing through the link would corrupt `_next` too
+    os.remove(os.path.join(stations_dir, data))
+    with open(os.path.join(stations_dir, data), "wb") as f:
+        f.write(b"not a parquet file")
+    before = sorted(os.listdir(stations_dir))
+    with pytest.raises(Exception):
+        S.upsert_stations_sink(
+            _station_batch(spark, _STATION_BATCHES[1]), 1, stations_dir, run_key="ck"
+        )
+    assert sorted(os.listdir(stations_dir)) == before
+    with open(os.path.join(stations_dir, data), "rb") as f:
+        assert f.read() == b"not a parquet file"
+    assert _stations(spark, stations_dir + "_next") == want
+
+
+# the one-file stations state publishes 4 links (data file, its .crc,
+# ._SUCCESS.crc, _SUCCESS): crash after each of the first three
+@pytest.mark.parametrize("links_before_crash", [1, 2, 3])
+def test_station_sink_recovers_crash_mid_publish(
+    spark, tmp_path, monkeypatch, links_before_crash
+):
+    """A crash inside the publish of batch 1 — after the main dir lost
+    `_SUCCESS` and gained some new links, before the sidecar write —
+    must not lose or double-count batch 1 when it is re-delivered: the
+    retry redoes the publish from the complete `_next`, and the embedded
+    marker (trusted again once `_SUCCESS` is back) skips the re-apply."""
+    import os
+
+    stations_dir = str(tmp_path / "stations")
+    batches = [_station_batch(spark, rows) for rows in _STATION_BATCHES[:2]]
+    S.upsert_stations_sink(batches[0], 0, stations_dir, run_key="ck")
+    real_link = os.link
+    linked = []
+
+    def crashing_link(src, dst):
+        if len(linked) == links_before_crash:
+            raise OSError("simulated crash mid-publish")
+        linked.append(os.path.basename(dst))
+        real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", crashing_link)
+    with pytest.raises(OSError, match="mid-publish"):
+        S.upsert_stations_sink(batches[1], 1, stations_dir, run_key="ck")
+    monkeypatch.setattr(os, "link", real_link)
+    # the crash state: some new links, no _SUCCESS, sidecar still at batch 0
+    assert sorted(os.listdir(stations_dir)) == sorted(linked)
+    assert "_SUCCESS" not in linked
+    assert S._last_applied_batch(stations_dir, "ck") == 0
+
+    S.upsert_stations_sink(batches[1], 1, stations_dir, run_key="ck")  # retry
+    got = _stations(spark, stations_dir)
+    assert sum(v[1] for v in got.values()) == 6, got  # 3 + 3 non-null-src rows
+    assert got["A"][1] == 3 and got["C"][1] == 1
+    assert os.path.exists(os.path.join(stations_dir, "_SUCCESS"))
+    # a genuine re-delivery after the recovered publish is still a no-op
+    S.upsert_stations_sink(batches[1], 1, stations_dir, run_key="ck")
+    assert _stations(spark, stations_dir) == got
+
+
 def test_pysource_stream_reader_matches_batch(spark, tmp_path):
     """Streaming side of the Python Data Source connector (Spark 4.0
     simpleStreamReader): draining the aprs_replay stream must deliver
