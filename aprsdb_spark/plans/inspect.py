@@ -46,3 +46,45 @@ def partition_filters(df: DataFrame) -> list[str]:
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle boundaries in the plan — the scale currency."""
     return formatted_plan(df).count("Exchange")
+
+
+_STAGE_WRAPPERS = ("ShuffleQueryStageExec", "BroadcastQueryStageExec", "ResultQueryStageExec")
+# reused exchanges and cached relations print their source subtree but
+# run none of it again, so the walk neither counts nor enters them
+_NOT_ENTERED = (
+    "ReusedExchangeExec",
+    "ReusedSubqueryExec",
+    "InMemoryTableScanExec",
+    "TableCacheQueryStageExec",
+)
+
+
+def exchange_nodes(df: DataFrame) -> dict:
+    """Shuffle and broadcast exchanges of the executed plan, counted as
+    nodes of its tree: {"shuffle": n, "broadcast": m}. An adaptive
+    plan is read at its current state (the initial plan before the
+    frame runs, the final one after) with its query stages unwrapped,
+    and subqueries are entered. Unlike count_exchanges, a cached
+    sibling subtree or a reused exchange adds nothing, so the count
+    does not depend on what the session ran before."""
+    out = {"shuffle": 0, "broadcast": 0}
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if cls in _STAGE_WRAPPERS:
+            stack.append(node.plan())
+            continue
+        if cls == "ShuffleExchangeExec":
+            out["shuffle"] += 1
+        elif cls == "BroadcastExchangeExec":
+            out["broadcast"] += 1
+        elif cls in _NOT_ENTERED:
+            continue
+        for seq in (node.children(), node.subqueries()):
+            for i in range(seq.size()):
+                stack.append(seq.apply(i))
+    return out

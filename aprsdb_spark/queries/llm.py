@@ -4678,8 +4678,13 @@ def j_ks_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (widened before the multiply); one floored display division.
 
     Plan: one narrow map (literal-axis fold + floor) → ONE (label,
-    cell) hash agg; grid, label totals, and the CDF matrix are
-    re-aggs; both windows partition by label over grid rows."""
+    cell) hash agg, the only corpus shuffle. Its grid×|labels| output
+    is pinned to a single-partition leaf, so the grid, label-total and
+    corpus-total re-aggs, the CDF matrix and both label windows run in
+    one partition with no further shuffle; the |labels|-row totals,
+    the cell counts and the corpus total reach the matrix as
+    broadcasts. The rk = 1 row of the (d desc, p3) ranking carries
+    both the maximum d and the smallest p3 that attains it."""
     t = load(spark, sf_dir)
     from ..operators.similarity import _lit_vector, pca_axis_local
 
@@ -4690,8 +4695,21 @@ def j_ks_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(proj * _KS_EMBED_GRID + F.lit(0.5)).cast("long").alias("p3"),
     )
     # (label, cell) counts: grid-bounded metadata behind the corpus
-    # shuffle, re-aggregated four ways — persist (SCALE.md 4r rule)
-    cl = p.groupBy("label", "p3").agg(F.count("*").cast("long").alias("c")).persist()
+    # shuffle, re-aggregated four ways. One single-partition leaf
+    # serves all four (analytics.py _meta1's shape): repartition(1) is
+    # the one exchange, the lazy local checkpoint makes it a leaf the
+    # planner cannot re-shuffle and keeps its rows once computed, and
+    # coalesce(1) over a leaf reports SinglePartition, so every agg and
+    # window below plans without an exchange. No persist, so the qid
+    # leaves no cache entry. The cells join is broadcast by hint: the
+    # leaf's size estimate grows with the corpus, its rows do not.
+    cl = (
+        p.groupBy("label", "p3")
+        .agg(F.count("*").cast("long").alias("c"))
+        .repartition(1)
+        .localCheckpoint(eager=False)
+        .coalesce(1)
+    )
     g = cl.groupBy("p3").agg(F.sum("c").cast("long").alias("cg"))
     wg = Window.orderBy("p3").rowsBetween(Window.unboundedPreceding, 0)
     cg = g.select("p3", F.sum("cg").over(wg).cast("long").alias("cumg"))
@@ -4705,7 +4723,7 @@ def j_ks_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     mat = (
         F.broadcast(labs)
         .crossJoin(cg)
-        .join(cl, ["label", "p3"], "left")
+        .join(F.broadcast(cl), ["label", "p3"], "left")
         .select(
             "label",
             "nl",
@@ -4734,29 +4752,22 @@ def j_ks_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("label").orderBy(F.col("d").desc(), F.col("p3")))
         .alias("rk"),
     ).where(F.col("rk") == 1)
-    agg = num.groupBy("label", "nl", "big_n").agg(F.max("d").alias("dmax"))
-    return (
-        agg.join(
-            ranked.select(F.col("label").alias("r_label"), F.col("p3").alias("at3")),
-            F.col("label") == F.col("r_label"),
-        )
-        .select(
-            "label",
-            F.col("nl").alias("n_in"),
-            (F.col("big_n") - F.col("nl")).alias("n_rest"),
-            (
-                F.floor(
-                    F.col("dmax").cast("double")
-                    / (F.col("nl").cast(dec) * (F.col("big_n") - F.col("nl"))).cast(
-                        "double"
-                    )
-                    * 1000000
-                    + F.lit(0.5)
+    return ranked.select(
+        "label",
+        F.col("nl").alias("n_in"),
+        (F.col("big_n") - F.col("nl")).alias("n_rest"),
+        (
+            F.floor(
+                F.col("d").cast("double")
+                / (F.col("nl").cast(dec) * (F.col("big_n") - F.col("nl"))).cast(
+                    "double"
                 )
-                / 1000000
-            ).alias("ks_stat"),
-            (F.col("at3") / F.lit(float(_KS_EMBED_GRID))).alias("ks_at"),
-        )
+                * 1000000
+                + F.lit(0.5)
+            )
+            / 1000000
+        ).alias("ks_stat"),
+        (F.col("p3") / F.lit(float(_KS_EMBED_GRID))).alias("ks_at"),
     )
 
 

@@ -1972,6 +1972,46 @@ def test_ks_embed_matches_python_brute(spark):
         assert r.ks_at == best[1] / 1000.0
 
 
+def test_ks_embed_runs_on_one_leaf(spark):
+    """Everything after j_ks_embed's (label, cell) count runs on one
+    single-partition leaf: the executed plan holds no shuffle exchange
+    (the corpus aggregation sits behind the checkpointed leaf, and AQE
+    runs its shuffle stages while the qid is built) and three
+    broadcasts (label totals, cell counts, corpus total). A noop write
+    of the built frame runs 4 Spark jobs with AQE on, the three
+    broadcasts and the result; the persisted form it replaced planned
+    10 shuffles and 6 broadcasts and ran 27 jobs per write."""
+    from aprsdb_spark.plans.inspect import exchange_nodes
+
+    spark.catalog.clearCache()
+    df = QUERIES["j_ks_embed"](spark, SF_DIR)
+    assert exchange_nodes(df) == {"shuffle": 0, "broadcast": 3}
+    sc = spark.sparkContext
+    group = "ks-embed-write-jobs"
+    sc.setJobGroup(group, "j_ks_embed noop write")
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 4, jobs
+    assert exchange_nodes(df) == {"shuffle": 0, "broadcast": 3}
+
+
+def test_ks_embed_leaves_no_cache_entry(spark, duck):
+    """j_ks_embed's cell-count leaf is a lazy local checkpoint, not a
+    persist (which leaked one CacheManager entry per call), and the
+    qid still matches its DuckDB oracle at sf0.01."""
+    from aprsdb_spark.registry import ORACLE
+    from tests.conftest import compare_query
+
+    spark.catalog.clearCache()
+    n = compare_query(spark, duck, QUERIES["j_ks_embed"], ORACLE["j_ks_embed"])
+    assert n > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_minhash_est_error_unbiased_shape(spark):
     """Estimate buckets cover all block pairs; per-bucket mean exact
     jaccard increases with the match count (the estimator is monotone

@@ -1125,7 +1125,11 @@ _SHUFFLE_BUDGETS = {
     "a_scan_xml": 1,
     "j_split_balance": 23,      # reprint-inflated (shared drift rollup)
     "j_neyman_allocation": 4,
-    "j_ks_embed": 24,           # reprint-inflated (persisted cell counts)
+    "j_ks_embed": 3,            # the 3 BroadcastExchanges; the corpus agg sits
+    #                             behind the checkpointed single-partition
+    #                             cell-count leaf, which prints no Exchange and
+    #                             no cached child (was 24, reprint-inflated by
+    #                             the persisted cell counts)
     "j_minhash_est_error": 6,
     "j_dedup_survivors": 14,  # +1 spread() repartition, reprint-inflated (persisted shingle frame)
     "j_dup_transitivity": 21,   # reprint-inflated (persisted edges, 2 refs x wedge join)
