@@ -1,10 +1,19 @@
 """APRS packet parsing, expression-first.
 
 Everything regular (TNC2 header, uncompressed positions, weather,
-telemetry, messages, status) is pure `pyspark.sql.functions` — stays in
-whole-stage codegen, scales linearly, no Python in the hot path. Only
-the two byte-twiddling formats (base-91 compressed positions, Mic-E)
-drop to an Arrow-batched pandas UDF (decoders.py).
+telemetry, messages, status) is pure `pyspark.sql.functions` — scales
+linearly, no Python in the hot path. Only the two byte-twiddling
+formats (base-91 compressed positions, Mic-E) drop to an Arrow-batched
+pandas UDF (decoders.py).
+
+It does NOT run in whole-stage codegen: the two higher-order lambdas,
+the q-construct `filter(path, x -> x RLIKE '^qA')` and the telemetry
+`transform(slice(parts, 1, 5), x -> try_cast(x AS DOUBLE))`, are
+CodegenFallback, so both parse Projects plan without a `*(n)` stage
+and every task generates its projection afresh. A lambda-free form
+(`regexp_extract` for the q-construct, one array `try_cast` for the
+telemetry) fuses into one stage with identical rows, but showed no
+batch parse gain, so it is not used (ROADMAP item 4).
 
 Grammar sources (public): APRS Protocol Reference v1.0.1 (TAPR 2000) —
 TNC2 framing §4, DTIs §5 p.17, positions §6/§9, weather §12, telemetry
@@ -37,7 +46,9 @@ def _null_d() -> Column:
 
 def parse_tnc2(raw: Column) -> Column:
     """raw line -> struct(src, dst, path array, q_construct, gate, dti,
-    info). Pure regexp/split/filter — no UDF (SURVEY.md h_str_parse_tnc2)."""
+    info). Pure regexp/split/filter — no UDF (SURVEY.md h_str_parse_tnc2);
+    the q-construct `filter` lambda is CodegenFallback, so the Project
+    holding it stays out of whole-stage codegen."""
     src = F.regexp_extract(raw, _HEADER_RE, 1)
     dst = F.regexp_extract(raw, _HEADER_RE, 2)
     path_str = F.regexp_extract(raw, _HEADER_RE, 3)
@@ -402,7 +413,7 @@ def parse_packets(df: DataFrame, raw_col: str = "raw", recv_ts_col: str | None =
     shape). Dispatches on the Data Type Identifier (first info byte,
     APRS101 §5 p.17): ! = / @ positions, _ weather, T telemetry,
     : messages, > status. Compressed/Mic-E enrichment is a separate
-    opt-in stage (decoders.decode_compressed) because it leaves codegen.
+    opt-in stage (decoders.decode_compressed) because it runs Python.
 
     The wide frame is built from precomputed SQL text (two selectExpr
     stages, cached at module level) rather than per-call Column ops —

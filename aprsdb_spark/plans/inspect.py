@@ -66,7 +66,13 @@ def exchange_nodes(df: DataFrame) -> dict:
     frame runs, the final one after) with its query stages unwrapped,
     and subqueries are entered. Unlike count_exchanges, a cached
     sibling subtree or a reused exchange adds nothing, so the count
-    does not depend on what the session ran before."""
+    does not depend on what the session ran before.
+
+    A checkpointed leaf is opaque: the exchanges that ran while it was
+    built (j_ks_embed's (label, cell) counts, the `_meta1` leaves of the
+    six graph qids) sit behind its `LogicalRDD` and are not counted;
+    their jobs run at build time and show up as build jobs
+    (perfbench's `queries.build_jobs`), not here."""
     out = {"shuffle": 0, "broadcast": 0}
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:

@@ -82,7 +82,22 @@ def get_spark(app_name: str = "aprsdb_spark", shuffle_partitions: int | None = N
         shuffle_partitions = 2 * cores
     b = SparkSession.builder.appName(app_name)
     if not _external_master_defined():
-        b = b.master(f"local[{cores}]")
+        # Streaming checkpoints on local disk: the default FileContext
+        # manager reaches RawLocalFs, which without libhadoop (the pip
+        # pyspark ships none) forks `readlink` for every link-status
+        # probe of a rename. Measured per ingest trigger at local[4]: the
+        # stations sink call forked 256 `readlink` + 73 `chmod`, the
+        # offset/commit-log writes 20-30 more; through FileSystem
+        # (File.renameTo) that is 0 `readlink`, 73 `chmod` and 4-6 forks
+        # outside the sink, with the same checkpoint files. Only this
+        # branch sets it: a master decided outside the engine (cluster,
+        # driver harness, tune()) keeps Spark's default, and a session
+        # conf set later still wins.
+        b = b.master(f"local[{cores}]").config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     b = (
         b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

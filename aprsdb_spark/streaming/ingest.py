@@ -14,6 +14,14 @@ key it narrowly (src, md5(payload)) not (src, raw), watermark
 aggressively (30 s dedup, minutes for windows), and use RocksDB state
 store on real clusters. Every query below is watermarked: unbounded
 state is an outage, not a feature.
+
+RocksDB stays the cluster advice, where state outgrows executor memory;
+it is not the cheaper commit at local scale. Measured on the perfbench
+`ingest` stream (seed 7, local[4], 16 dedup stores), summed state-store
+`commitTimeMs` per trigger: RocksDBStateStoreProvider 1.4-2.3 s against
+0.8-1.4 s for the default HDFS-backed store with Spark's FileContext
+checkpoint manager, and 0.6-1.1 s against 0.02-0.16 s with the
+FileSystem manager that session.get_spark sets for a local master.
 """
 
 from __future__ import annotations

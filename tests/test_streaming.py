@@ -920,6 +920,71 @@ def test_station_sink_recovers_crash_mid_publish(
     assert _stations(spark, stations_dir) == got
 
 
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """A get_spark session with a local master writes streaming
+    checkpoints through Hadoop FileSystem, not FileContext (whose local
+    renames fork `readlink` without libhadoop), and the checkpoint keeps
+    its layout: two restarts of the collector stream (dedup_30s ->
+    stations sink) over one checkpoint leave `N.delta`, Spark's
+    `N.delta.crc` and Hadoop's `.N.delta.crc` for every committed
+    version in every state dir, and a stations table equal to a one-shot
+    station_view recompute."""
+    import os
+
+    from aprsdb_spark.aprs.parse import station_view
+
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    ind, ck = tmp_path / "in", str(tmp_path / "ck")
+    stations_dir = str(tmp_path / "stations")
+    ind.mkdir()
+    lines = (FIXTURES / "pos_uncompressed.txt").read_text().splitlines(keepends=True)
+    # time-ordered halves, one per run: the second run's rows are not late
+    for i, half in enumerate((lines[:100], lines[100:])):
+        (ind / f"part{i}.txt").write_text("".join(half))
+        stream = S.dedup_30s(S.parsed_packet_stream(S.read_packet_lines(spark, str(ind))))
+        q = (
+            stream.writeStream.option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .foreachBatch(lambda b, bid: S.upsert_stations_sink(b, bid, stations_dir, run_key=ck))
+            .start()
+        )
+        q.awaitTermination()
+
+    n_commits = sum(n.isdigit() for n in os.listdir(os.path.join(ck, "commits")))
+    state = os.path.join(ck, "state", "0")
+    parts = [p for p in os.listdir(state) if p.isdigit()]
+    assert n_commits >= 2 and parts
+    for p in parts:
+        names = set(os.listdir(os.path.join(state, p)))
+        versions = {int(n.split(".")[0]) for n in names if n.endswith(".delta")}
+        assert versions == set(range(1, n_commits + 1)), (p, sorted(names))
+        for v in versions:
+            assert {f"{v}.delta", f"{v}.delta.crc", f".{v}.delta.crc"} <= names, (p, v)
+
+    # the fixture repeats no (src, payload), so the recompute needs no dedup
+    raw = spark.read.text(str(ind))
+    cols = F.split(F.col("value"), "\t", 2)
+    packets = S.parse_packets(
+        raw.select(
+            F.timestamp_millis(F.try_element_at(cols, F.lit(1)).try_cast("long")).alias("recv_ts"),
+            F.try_element_at(cols, F.lit(2)).alias("raw"),
+        ),
+        recv_ts_col="recv_ts",
+    )
+    want = {
+        r.src: (r.last_heard, r.n_packets, r.last_lat, r.last_lon)
+        for r in station_view(packets).collect()
+    }
+    assert sum(v[1] for v in want.values()) == 200
+    assert _stations(spark, stations_dir) == want
+
+
 def test_pysource_stream_reader_matches_batch(spark, tmp_path):
     """Streaming side of the Python Data Source connector (Spark 4.0
     simpleStreamReader): draining the aprs_replay stream must deliver
