@@ -3641,14 +3641,15 @@ def _lp_ctes(rounds: int) -> str:
     return ",\n    ".join(ctes)
 
 
-def _lp_labels(spark: SparkSession, t) -> DataFrame:
-    """Synchronous label propagation, _LP_ROUNDS rounds: (nk, lbl).
+def _lp_labels(t, und: DataFrame) -> DataFrame:
+    """Synchronous label propagation, _LP_ROUNDS rounds: (nk, lbl) over
+    the neighbor frame ``und`` (the caller's _meta1(_sym_neighbors(t))
+    leaf, so a qid that also reads the graph builds it once).
     The DataFrame twin of _lp_ctes(_LP_ROUNDS)."""
     # r17: single-partition leaf (_meta1) + SHUFFLE_HASH-hinted round
     # joins — the whole _LP_ROUNDS iteration executes as one fused
     # stage with no per-round exchange or broadcast build (j_pagerank's
     # lowering; values are exact integers, partitioning-independent).
-    und = _meta1(_sym_neighbors(t))
     nodes = t.nation.select(F.col("n_nationkey").alias("nk")).coalesce(1)
     labels = nodes.select("nk", F.col("nk").alias("lbl"))
     for _ in range(_LP_ROUNDS):
@@ -3719,7 +3720,7 @@ def j_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the fixed round count; a high-round deployment adds the lazy
     localCheckpoint every ~8 rounds as j_dedup_cluster does."""
     t = load(spark, sf_dir)
-    labels = _lp_labels(spark, t)
+    labels = _lp_labels(t, _meta1(_sym_neighbors(t)))
     sz = labels.groupBy("lbl").agg(F.count("*").cast("long").alias("n_members"))
     return (
         labels.join(sz.hint("shuffle_hash"), "lbl")
@@ -3797,8 +3798,8 @@ def j_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins SHUFFLE_HASH-hinted the whole modularity fold is one stage
     # after the flow agg (j_pagerank's lowering). _meta1's checkpoint
     # leaf also serves the multi-consumer role the persists played.
-    labels = _meta1(_lp_labels(spark, t))  # consumers: intra (x2), dsum
-    und = _meta1(_sym_neighbors(t))  # consumers: edg, deg
+    und = _meta1(_sym_neighbors(t))  # consumers: labels, edg, deg
+    labels = _meta1(_lp_labels(t, und))  # consumers: intra (x2), dsum
     edg = und.select(
         F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
     ).distinct()

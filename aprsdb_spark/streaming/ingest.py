@@ -26,6 +26,8 @@ FileSystem manager that session.get_spark sets for a local master.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -212,7 +214,7 @@ def message_ack_stream(parsed: DataFrame, within: str = "10 minutes") -> DataFra
     )
 
 
-def _last_applied_batch(stations_dir: str, run_key: str) -> int:
+def _last_applied_batch(state_dir: str, run_key: str) -> int:
     """Highest batch_id already applied for ``run_key``, from BOTH
     markers (max of the two):
 
@@ -241,18 +243,18 @@ def _last_applied_batch(stations_dir: str, run_key: str) -> int:
 
     last = -1
     try:
-        with open(os.path.join(stations_dir + "_meta", "last_batch.json")) as f:
+        with open(os.path.join(state_dir + "_meta", "last_batch.json")) as f:
             meta = json.load(f)
         if meta.get("run_key") == run_key:
             last = int(meta["batch_id"])
     except (OSError, ValueError, KeyError, TypeError):
         pass
-    if not os.path.exists(os.path.join(stations_dir, "_SUCCESS")):
+    if not os.path.exists(os.path.join(state_dir, "_SUCCESS")):
         return last  # state incomplete/absent: embedded marker untrustworthy
     try:
         import pyarrow.dataset as ds
 
-        dset = ds.dataset(stations_dir, format="parquet")
+        dset = ds.dataset(state_dir, format="parquet")
         if {"_run_key", "_batch_id"} <= set(dset.schema.names):
             for rb in dset.to_batches(columns=["_run_key", "_batch_id"], batch_size=1):
                 if rb.num_rows:
@@ -317,8 +319,8 @@ def _recover_incomplete_swap(spark: SparkSession, state_dir: str) -> None:
     retry would skip the batch and freeze truncated state. `_next`
     still holds the complete state, so redo the publish before anything
     reads it. (A crash during the `_next` write leaves the main dir
-    intact.) Runs at the top of every overwrite sink and in the views;
-    a completed main dir makes it two stat calls."""
+    intact.) Runs at the top of _merge_store and in the views; a
+    completed main dir makes it two stat calls."""
     import os
 
     nxt = state_dir + "_next"
@@ -329,11 +331,11 @@ def _recover_incomplete_swap(spark: SparkSession, state_dir: str) -> None:
     _publish(spark, state_dir)
 
 
-def _record_applied_batch(stations_dir: str, run_key: str, batch_id: int) -> None:
+def _record_applied_batch(state_dir: str, run_key: str, batch_id: int) -> None:
     import json
     import os
 
-    meta_dir = stations_dir + "_meta"
+    meta_dir = state_dir + "_meta"
     os.makedirs(meta_dir, exist_ok=True)
     tmp = os.path.join(meta_dir, ".last_batch.tmp")
     with open(tmp, "w") as f:
@@ -351,36 +353,93 @@ def _with_marker(df: DataFrame, run_key: str | None, batch_id: int) -> DataFrame
     )
 
 
+def _merge_store(
+    partial: DataFrame,
+    batch_id: int,
+    state_dir: str,
+    run_key: str | None,
+    merge: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Fold one micro-batch into one parquet state store — the
+    read-merge-publish every overwrite sink below runs, once per store:
+
+    1. finish a publish that crashed part-way (_recover_incomplete_swap);
+    2. skip a batch already applied for ``run_key`` (_last_applied_batch);
+    3. read the stored rows (none on the first batch);
+    4. ``merge`` them with ``partial`` into the new state — on the first
+       batch too, so a partial may be one row per input row;
+    5. commit the result with the embedded marker to `<dir>_next` and
+       publish it by hard link (_write_state);
+    6. record the batch in the sidecar (_record_applied_batch).
+
+    Idempotence under replay: foreachBatch is at-least-once — after a
+    crash the restarted query re-delivers the last micro-batch with the
+    SAME batch_id, and most merges (sums) double-count a re-apply. Pass
+    ``run_key`` (the query's checkpoint path — batch_ids are only unique
+    per checkpoint) and any batch_id <= the last applied one for the same
+    run_key is skipped, the standard "transactional-ish" foreachBatch
+    recipe. A different run_key is a deliberate reprocessing run and
+    always applies; run_key=None turns the guard off (at-least-once).
+    The marker is written twice: in the sidecar `<dir>_meta/last_batch.json`
+    after the publish, and in the state rows (_with_marker), where it
+    commits atomically with the data — a crash between the publish and
+    the sidecar write (the r7 ADVICE window) does not re-apply. A failed
+    `_next` write propagates and its retry sees the old state intact
+    (_publish refuses a `_next` without `_SUCCESS`).
+
+    ``partial`` must carry the state's columns. A sink with several
+    stores calls this once per store: each store has its own guard, so
+    a re-delivery after a crash between two stores' publishes re-applies
+    only the stores that missed the batch. Keep ``state_dir`` on a local
+    file system (_publish links files)."""
+    spark = partial.sparkSession
+    _recover_incomplete_swap(spark, state_dir)
+    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
+        return
+    state = _read_state_or_none(spark, state_dir)
+    merged = merge(partial if state is None else state.unionByName(partial))
+    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
+    if run_key is not None:
+        _record_applied_batch(state_dir, run_key, batch_id)
+
+
+def _summed(keys: list[str], *cols: str) -> Callable[[DataFrame], DataFrame]:
+    """The additive merge law for _merge_store: ``cols`` summed per
+    ``keys`` (counts of any split of the stream add up to the whole
+    stream's counts)."""
+
+    def merge(rows: DataFrame) -> DataFrame:
+        return rows.groupBy(*keys).agg(*[F.sum(c).cast("long").alias(c) for c in cols])
+
+    return merge
+
+
 def upsert_stations_sink(
     batch: DataFrame, batch_id: int, stations_dir: str, run_key: str | None = None
 ) -> None:
     """foreachBatch upsert of the stations dimension — the collector's
-    'DB write'. Parquet read-merge-overwrite here; on a real deployment
-    this is a Delta/Iceberg MERGE keyed on src (same shape,
-    transactional).
+    'DB write'. Parquet read-merge-publish through _merge_store here
+    (which documents ``run_key`` and the replay guard: n_packets is a
+    SUM, so a blind re-apply double-counts); on a real deployment this
+    is a Delta/Iceberg MERGE keyed on src (same shape, transactional).
 
-    Idempotence under replay: foreachBatch is at-least-once — after a
-    crash the restarted query re-delivers the last micro-batch with the
-    SAME batch_id. Because this merge SUMS n_packets, a blind re-apply
-    double-counts, so pass ``run_key`` (the query's checkpoint path —
-    batch_ids are only unique per checkpoint) and the sink records the
-    last applied (run_key, batch_id) in a sidecar
-    (`<dir>_meta/last_batch.json`, written after the publish) and skips any
-    batch_id <= it for the same run_key — the standard
-    "transactional-ish" foreachBatch recipe. A different run_key is a
-    deliberate reprocessing run and always applies. With run_key=None
-    the guard is off (at-least-once, replay inflates n_packets).
-    The marker is ALSO embedded in the state rows (_with_marker), so it
-    commits atomically with the data — a crash between the publish and
-    the sidecar write (the r7 ADVICE window) no longer re-applies; see
-    _last_applied_batch. State is published by hard link (_publish), so
-    keep ``stations_dir`` on a local file system."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, stations_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(stations_dir, run_key):
-        return
-    # each packet is a one-packet partial of a stored row, so state and
-    # batch fold in ONE aggregation (one shuffle) with the same result
+    Each packet is a one-packet partial of a stored row, so state and
+    batch fold in ONE aggregation (one shuffle)."""
+
+    def merge(rows: DataFrame) -> DataFrame:
+        # one file, not one per shuffle partition: a row per callsign is
+        # small, and the publish keeps _next's layout
+        return (
+            rows.groupBy("src")
+            .agg(
+                F.max("last_heard").alias("last_heard"),
+                F.sum("n_packets").alias("n_packets"),
+                F.max_by("last_lat", "last_heard").alias("last_lat"),
+                F.max_by("last_lon", "last_heard").alias("last_lon"),
+            )
+            .coalesce(1)
+        )
+
     part = batch.where(F.col("src").isNotNull()).select(
         "src",
         F.col("recv_ts").alias("last_heard"),
@@ -388,19 +447,7 @@ def upsert_stations_sink(
         F.col("latitude").alias("last_lat"),
         F.col("longitude").alias("last_lon"),
     )
-    existing = _read_state_or_none(spark, stations_dir)
-    rows = part if existing is None else existing.unionByName(part)
-    merged = rows.groupBy("src").agg(
-        F.max("last_heard").alias("last_heard"),
-        F.sum("n_packets").alias("n_packets"),
-        F.max_by("last_lat", "last_heard").alias("last_lat"),
-        F.max_by("last_lon", "last_heard").alias("last_lon"),
-    )
-    # one file, not one per shuffle partition: a row per callsign is small,
-    # and the publish keeps _next's layout (the old copy compacted it)
-    _write_state(_with_marker(merged, run_key, batch_id).coalesce(1), stations_dir)
-    if run_key is not None:
-        _record_applied_batch(stations_dir, run_key, batch_id)
+    _merge_store(part, batch_id, stations_dir, run_key, merge)
 
 
 def run_available_now(stream_df: DataFrame, checkpoint: str, sink=None, **foreach_kwargs):
@@ -428,34 +475,21 @@ def incremental_rollup_sink(
     qid's driver-checked fact; tests/test_streaming.py asserts the
     streamed state equals the one-shot batch aggregate after replay).
 
-    Same read-merge-overwrite + (run_key, batch_id) replay guard as
-    upsert_stations_sink — sums double-count under at-least-once
-    re-delivery, so the sidecar marker skips re-applied batches. Input
-    schema: any frame with (day, value) columns."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
-    part = batch.groupBy("day").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(F.col("value").cast("decimal(20,6)")).alias("s"),
-    )
-    existing = _read_state_or_none(spark, state_dir)
-    if existing is not None:
-        merged = (
-            existing.unionByName(part)
-            .groupBy("day")
-            .agg(F.sum("n").cast("long").alias("n"), F.sum("s").alias("s"))
+    Merged through _merge_store — sums double-count under
+    at-least-once re-delivery, so the replay guard skips re-applied
+    batches. Input schema: any frame with (day, value) columns."""
+
+    def merge(rows: DataFrame) -> DataFrame:
+        return rows.groupBy("day").agg(
+            F.sum("n").cast("long").alias("n"), F.sum("s").alias("s")
         )
-    else:
-        merged = part
-    # _publish refuses a _next without _SUCCESS: a failed staging write
-    # propagates and its retry sees the old state intact; a retry AFTER
-    # a completed publish is caught by the marker embedded in the state
-    # rows (_last_applied_batch)
-    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+
+    part = batch.select(
+        "day",
+        F.lit(1).cast("long").alias("n"),
+        F.col("value").cast("decimal(20,6)").alias("s"),
+    )
+    _merge_store(part, batch_id, state_dir, run_key, merge)
 
 
 def cdc_apply_sink(
@@ -475,50 +509,27 @@ def cdc_apply_sink(
     matches the batch operator's change count after full replay
     (tests/test_streaming.py proves equality).
 
-    Merge shape: the batch collapses to one row per key (max_by on the
-    order struct + a count partial) BEFORE touching the store, so the
-    read-merge-overwrite handles |keys| rows, not |changes|. Same
-    missing-path-only state read and (run_key, batch_id) replay guard
-    as the other sinks here."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
-    ordk = F.struct("ts_ms", "event_id")
-    part = batch.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_changes"),
-        F.max_by(F.struct("ts_ms", "event_id", "value", "op"), ordk).alias("last"),
-    )
-    existing = _read_state_or_none(spark, state_dir)
-    if existing is not None:
-        prev = existing.select(
-            "user_id",
-            "n_changes",
-            F.struct("ts_ms", "event_id", "value", "op").alias("last"),
+    Merge shape: each change is a one-change partial of a stored row,
+    so state and batch fold in ONE aggregation per key (max_by on the
+    order struct + a count), merged through _merge_store; map-side
+    partial aggregation collapses the batch to one row per key per
+    partition before the shuffle."""
+
+    def merge(rows: DataFrame) -> DataFrame:
+        last = F.max_by(
+            F.struct("ts_ms", "event_id", "value", "op"), F.struct("ts_ms", "event_id")
         )
-        merged = (
-            prev.unionByName(part)
-            .groupBy("user_id")
-            .agg(
-                F.sum("n_changes").cast("long").alias("n_changes"),
-                F.max_by(
-                    F.col("last"), F.struct("last.ts_ms", "last.event_id")
-                ).alias("last"),
-            )
+        return (
+            rows.groupBy("user_id")
+            .agg(last.alias("last"), F.sum("n_changes").cast("long").alias("n_changes"))
+            .select("user_id", "last.*", "n_changes")
         )
-    else:
-        merged = part
-    flat = merged.select(
-        "user_id",
-        F.col("last.ts_ms").alias("ts_ms"),
-        F.col("last.event_id").alias("event_id"),
-        F.col("last.value").alias("value"),
-        F.col("last.op").alias("op"),
-        "n_changes",
+
+    part = batch.select(
+        "user_id", "ts_ms", "event_id", "value", "op",
+        F.lit(1).cast("long").alias("n_changes"),
     )
-    _write_state(_with_marker(flat, run_key, batch_id), state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+    _merge_store(part, batch_id, state_dir, run_key, merge)
 
 
 def cdc_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -685,64 +696,49 @@ def leakage_monitor_sink(
     one-shot batch (hash, split) counts and the alerted hash set
     equals the batch audit's spanning groups).
 
-    Scale shape: the batch collapses to (h, split) partials BEFORE
-    touching state (shuffle carries 16-byte digests + counts, never
-    text); the store merge is the incremental_rollup read-merge-swap
-    with the same crash-recovery + (run_key, batch_id) replay guard
-    (counts double under at-least-once re-delivery without it);
-    alerts are APPEND-only and deduped per (h, split) by the anti
-    join against already-alerted pairs, so re-deliveries cannot
-    re-alert. Input schema: (doc_id, text)."""
+    Scale shape: the batch's rows become one-row (h, split) partials
+    (the shuffle carries 16-byte digests + counts, never text), summed
+    into the store through _merge_store (counts double under
+    at-least-once re-delivery without its replay guard). Alerts are
+    appended inside the guarded section, before the store's publish,
+    and deduped per (h, split) by the anti join against already-alerted
+    pairs, so re-deliveries cannot re-alert. Input schema: (doc_id,
+    text)."""
     spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
     prefix = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     split = (
         F.when(prefix < "cd", "train").when(prefix < "e6", "val").otherwise("test")
     )
-    part = (
-        batch.select(F.md5("text").alias("h"), split.alias("split"))
-        .groupBy("h", "split")
-        .agg(F.count("*").cast("long").alias("n"))
+    part = batch.select(
+        F.md5("text").alias("h"), split.alias("split"), F.lit(1).cast("long").alias("n")
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("h", "split")
-        .agg(F.sum("n").cast("long").alias("n"))
-        if existing is not None
-        else part
-    )
-    # alerts: arriving (h, split) pairs whose hash exists under a
-    # DIFFERENT split in the prior store OR elsewhere in this same
-    # batch (a cross-split pair can arrive together — both sides
-    # alert, deterministically), minus pairs already alerted
     alerts_dir = state_dir + "_alerts"
-    known = (
-        existing.select("h", "split").unionByName(part.select("h", "split"))
-        if existing is not None
-        else part.select("h", "split")
-    ).distinct()
-    crossed = (
-        part.alias("p")
-        .join(
-            known.alias("e"),
-            (F.col("p.h") == F.col("e.h"))
-            & (F.col("p.split") != F.col("e.split")),
+
+    def merge(rows: DataFrame) -> DataFrame:
+        # alerts: arriving (h, split) pairs whose hash exists under a
+        # DIFFERENT split in the prior store OR elsewhere in this same
+        # batch (a cross-split pair can arrive together — both sides
+        # alert, deterministically), minus pairs already alerted
+        known = rows.select("h", "split").distinct()
+        crossed = (
+            part.alias("p")
+            .join(
+                known.alias("e"),
+                (F.col("p.h") == F.col("e.h"))
+                & (F.col("p.split") != F.col("e.split")),
+            )
+            .groupBy(F.col("p.h").alias("h"), F.col("p.split").alias("split"))
+            .agg(F.sort_array(F.collect_set("e.split")).alias("prior_splits"))
         )
-        .groupBy(F.col("p.h").alias("h"), F.col("p.split").alias("split"))
-        .agg(F.sort_array(F.collect_set("e.split")).alias("prior_splits"))
-    )
-    prior_alerts = _read_state_or_none(spark, alerts_dir)
-    if prior_alerts is not None:
-        crossed = crossed.join(
-            prior_alerts.select("h", "split"), ["h", "split"], "left_anti"
-        )
-    crossed.write.mode("append").parquet(alerts_dir)
-    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+        prior_alerts = _read_state_or_none(spark, alerts_dir)
+        if prior_alerts is not None:
+            crossed = crossed.join(
+                prior_alerts.select("h", "split"), ["h", "split"], "left_anti"
+            )
+        crossed.write.mode("append").parquet(alerts_dir)
+        return _summed(["h", "split"], "n")(rows)
+
+    _merge_store(part, batch_id, state_dir, run_key, merge)
 
 
 def drift_monitor_sink(
@@ -770,45 +766,23 @@ def drift_monitor_sink(
     — a drifted tail lands in bucket 0/9 and raises chi-square, which
     is the correct alarm semantics for a frozen grid.
 
-    Scale shape: the batch collapses to ≤ |days|·10 (day, bucket)
-    partials BEFORE touching state (shuffle carries two small ints);
-    the merge is the incremental_rollup read-merge-swap with the same
-    crash recovery + (run_key, batch_id) replay guard (counts double
-    under at-least-once re-delivery without it). Input schema:
-    (ts_ms long, value double)."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
+    Scale shape: each row becomes a one-row (day, bucket) partial (the
+    shuffle carries two small ints; map-side aggregation collapses the
+    batch to ≤ |days|·10 rows per partition), summed into the state
+    through _merge_store (counts double under at-least-once re-delivery
+    without its replay guard). Input schema: (ts_ms long, value
+    double)."""
     v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
-    part = (
-        batch.select(
-            F.expr("ts_ms div 86400000").alias("day_idx"), v6.alias("v6")
-        )
-        .select(
-            "day_idx",
-            F.least(
-                F.lit(9),
-                F.greatest(
-                    F.lit(0),
-                    F.expr(f"((v6 - {int(lo)}) * 10) div ({int(hi)} - {int(lo)} + 1)"),
-                ),
-            ).alias("bucket"),
-        )
-        .groupBy("day_idx", "bucket")
-        .agg(F.count("*").cast("long").alias("oc"))
+    bucket = F.least(
+        F.lit(9),
+        F.greatest(
+            F.lit(0), F.expr(f"((v6 - {int(lo)}) * 10) div ({int(hi)} - {int(lo)} + 1)")
+        ),
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("day_idx", "bucket")
-        .agg(F.sum("oc").cast("long").alias("oc"))
-        if existing is not None
-        else part
-    )
-    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+    part = batch.select(
+        F.expr("ts_ms div 86400000").alias("day_idx"), v6.alias("v6")
+    ).select("day_idx", bucket.alias("bucket"), F.lit(1).cast("long").alias("oc"))
+    _merge_store(part, batch_id, state_dir, run_key, _summed(["day_idx", "bucket"], "oc"))
 
 
 def drift_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -830,45 +804,26 @@ def quality_gate_sink(
     batch collapses to per-source (count, defect-count) partials under
     the SHARED structural defect predicate (wilson_defect_col — one
     definition for the batch gate and the monitor), merged into state
-    by the read-merge-swap with the (run_key, batch_id) replay guard.
-    quality_gate_view() serves the accumulated state through the SAME
-    wilson_from_counts rollup as the batch audit, so streamed ≡ batch
-    after ordered replay is shared code, not a reimplementation — an
-    ingestion operator can threshold live on ci_low (the
-    small-slice-safe bound) instead of waiting for the nightly audit.
+    through _merge_store. quality_gate_view() serves the accumulated
+    state through the SAME wilson_from_counts rollup as the batch audit,
+    so streamed ≡ batch after ordered replay is shared code, not a
+    reimplementation — an ingestion operator can threshold live on
+    ci_low (the small-slice-safe bound) instead of waiting for the
+    nightly audit.
 
-    Scale shape: the batch collapses to |sources| rows of two BIGINTs
-    BEFORE touching state; counts double under at-least-once
-    re-delivery without the guard. Input schema: (source, n_chars,
-    text)."""
+    Scale shape: each row is a one-row (n, x) partial of its source;
+    map-side aggregation collapses the batch to |sources| rows of two
+    BIGINTs per partition before the shuffle; counts double under
+    at-least-once re-delivery without the guard. Input schema: (source,
+    n_chars, text)."""
     from ..queries.governance import wilson_defect_col
 
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
-    part = (
-        batch.select("source", wilson_defect_col().alias("defect"))
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("defect").cast("long").alias("x"),
-        )
+    part = batch.select(
+        "source",
+        F.lit(1).cast("long").alias("n"),
+        wilson_defect_col().cast("long").alias("x"),
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("source")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("x").cast("long").alias("x"),
-        )
-        if existing is not None
-        else part
-    )
-    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+    _merge_store(part, batch_id, state_dir, run_key, _summed(["source"], "n", "x"))
 
 
 def quality_gate_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -892,49 +847,36 @@ def card_monitor_sink(
     scalars, so the sink maintains the three ADDITIVE part stores from
     data_card_parts — (source, lang), (source, text-digest,
     char/token mass), (source, token) — each merged by plain summation
-    under one shared (run_key, batch_id) replay guard, and
-    card_current_view() derives the card through the SAME
-    data_card_from_parts rollup as the batch qid. Distinct-counts
-    become row counts of summed stores: the release dashboard updates
-    per micro-batch without ever re-scanning the corpus.
+    through _merge_store, and card_current_view() derives the card
+    through the SAME data_card_from_parts rollup as the batch qid.
+    Distinct-counts become row counts of summed stores: the release
+    dashboard updates per micro-batch without ever re-scanning the
+    corpus.
 
     Scale shape: the lang store is |sources|·|langs| rows; the digest
     store is one 16-byte row per DISTINCT text (the dedup_ingest store
     scale argument — viable at 10^10 docs bucketed by digest); the
     token store is Heaps-law-small. Each batch collapses to its
-    partials map-side before touching any store. Each of the three
-    stores carries its OWN replay guard (embedded marker + sidecar,
-    per-store dir): a replayed batch re-applies ONLY the stores that
-    missed it, so a crash between store swaps recovers without
-    double-counting the early stores or freezing the late ones. Input
-    schema: (source, n_chars, text)."""
+    partials map-side before touching any store. Each store carries
+    its OWN replay guard (_merge_store per store dir): a replayed batch
+    re-applies ONLY the stores that missed it — one shared guard would
+    either double-count the early stores or freeze the late ones,
+    depending on where it sat in the sequence. Input schema: (source,
+    n_chars, text)."""
     from ..queries.governance import data_card_parts
 
-    spark = batch.sparkSession
-    parts = data_card_parts(batch)
-    dirs = [state_dir + "_lang", state_dir + "_digest", state_dir + "_token"]
-    keys = [["source", "lang"], ["source", "digest"], ["source", "token"]]
-    sums = [["n"], ["n", "sum_chars", "sum_toks"], ["n"]]
-    # each store carries its OWN full replay guard (embedded marker +
-    # sidecar): a crash between store swaps followed by at-least-once
-    # re-delivery must re-apply ONLY the stores that missed the batch —
-    # one shared guard would either double-count the early stores or
-    # freeze the late ones, depending on where it sat in the sequence
-    for part, d, key, cols in zip(parts, dirs, keys, sums):
-        _recover_incomplete_swap(spark, d)
-        if run_key is not None and batch_id <= _last_applied_batch(d, run_key):
-            continue
-        existing = _read_state_or_none(spark, d)
-        merged = (
-            existing.unionByName(part)
-            .groupBy(*key)
-            .agg(*[F.sum(cn).cast("long").alias(cn) for cn in cols])
-            if existing is not None
-            else part
-        )
-        _write_state(_with_marker(merged, run_key, batch_id), d)
-        if run_key is not None:
-            _record_applied_batch(d, run_key, batch_id)
+    lang, digest, token = data_card_parts(batch)
+    _merge_store(lang, batch_id, state_dir + "_lang", run_key, _summed(["source", "lang"], "n"))
+    _merge_store(
+        digest,
+        batch_id,
+        state_dir + "_digest",
+        run_key,
+        _summed(["source", "digest"], "n", "sum_chars", "sum_toks"),
+    )
+    _merge_store(
+        token, batch_id, state_dir + "_token", run_key, _summed(["source", "token"], "n")
+    )
 
 
 def card_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -963,11 +905,11 @@ def cms_monitor_sink(
     cms_relation rollup as the batch qid, so the live heavy-hitter
     panel and the nightly audit are one definition.
 
-    Each of the two stores carries its OWN replay guard (embedded
-    marker + sidecar, per-store dir, the card_monitor_sink recovery
-    design): a crash between store swaps followed by at-least-once
-    re-delivery re-applies ONLY the store that missed the batch —
-    counts double otherwise.
+    Each of the two stores carries its OWN replay guard (_merge_store
+    per store dir, the card_monitor_sink recovery design): a crash
+    between store publishes followed by at-least-once re-delivery
+    re-applies ONLY the store that missed the batch — counts double
+    otherwise.
 
     Scale shape: the cells store is a CONSTANT 4x256 rows at any
     corpus scale (the point of CMS); the truth store is vocab-sized
@@ -977,7 +919,6 @@ def cms_monitor_sink(
     from ..operators.dedup import tokens_col
     from ..queries.sketches import cms_cells, cms_truth
 
-    spark = batch.sparkSession
     tok = batch.select(F.explode(tokens_col("text")).alias("tok"))
     tok.persist()  # consumers: cells partial + truth partial
     # try/finally, not straight-line: foreachBatch retries re-enter this
@@ -985,25 +926,12 @@ def cms_monitor_sink(
     # the exception path would leak one cached token frame per retry
     # into executor storage until the stream dies.
     try:
-        parts = [cms_cells(tok), cms_truth(tok)]
-        dirs = [state_dir + "_cells", state_dir + "_truth"]
-        keys = [["d", "bucket"], ["tok"]]
-        sums = [["c"], ["true_count"]]
-        for part, d, key, cols in zip(parts, dirs, keys, sums):
-            _recover_incomplete_swap(spark, d)
-            if run_key is not None and batch_id <= _last_applied_batch(d, run_key):
-                continue
-            existing = _read_state_or_none(spark, d)
-            merged = (
-                existing.unionByName(part)
-                .groupBy(*key)
-                .agg(*[F.sum(cn).cast("long").alias(cn) for cn in cols])
-                if existing is not None
-                else part
-            )
-            _write_state(_with_marker(merged, run_key, batch_id), d)
-            if run_key is not None:
-                _record_applied_batch(d, run_key, batch_id)
+        _merge_store(
+            cms_cells(tok), batch_id, state_dir + "_cells", run_key, _summed(["d", "bucket"], "c")
+        )
+        _merge_store(
+            cms_truth(tok), batch_id, state_dir + "_truth", run_key, _summed(["tok"], "true_count")
+        )
     finally:
         tok.unpersist()
 
@@ -1031,48 +959,23 @@ def hll_monitor_sink(
     hll_relation rollup as the batch qid.
 
     The register MAX-merge is IDEMPOTENT, so a replayed batch could
-    never corrupt the registers — the per-store replay guard here
-    skips redundant work and keeps the store-swap discipline uniform
-    with the additive monitors (an operator debugging recovery should
-    find ONE design, not one per merge law). The distinct-user truth
-    store (merged by DISTINCT union — also idempotent) exists so the
-    view can audit the estimate against the exact count; a
-    pure-production deployment keeps only the 256-row register store.
-    Input schema: (user_id)."""
+    never corrupt the registers — the per-store replay guard of
+    _merge_store here skips redundant work and keeps the store-publish
+    discipline uniform with the additive monitors (an operator
+    debugging recovery should find ONE design, not one per merge law).
+    The distinct-user truth store (merged by DISTINCT union — also
+    idempotent) exists so the view can audit the estimate against the
+    exact count; a pure-production deployment keeps only the 256-row
+    register store. Input schema: (user_id)."""
     from ..queries.sketches import hll_registers
 
-    spark = batch.sparkSession
-    regs_dir, users_dir = state_dir + "_regs", state_dir + "_users"
+    def max_merge(rows: DataFrame) -> DataFrame:
+        return rows.groupBy("reg").agg(F.max("r").alias("r"))
 
-    _recover_incomplete_swap(spark, regs_dir)
-    if not (
-        run_key is not None and batch_id <= _last_applied_batch(regs_dir, run_key)
-    ):
-        part = hll_registers(batch)
-        existing = _read_state_or_none(spark, regs_dir)
-        merged = (
-            existing.unionByName(part)
-            .groupBy("reg")
-            .agg(F.max("r").alias("r"))
-            if existing is not None
-            else part
-        )
-        _write_state(_with_marker(merged, run_key, batch_id), regs_dir)
-        if run_key is not None:
-            _record_applied_batch(regs_dir, run_key, batch_id)
-
-    _recover_incomplete_swap(spark, users_dir)
-    if not (
-        run_key is not None and batch_id <= _last_applied_batch(users_dir, run_key)
-    ):
-        part = batch.select("user_id").distinct()
-        existing = _read_state_or_none(spark, users_dir)
-        merged = (
-            existing.unionByName(part).distinct() if existing is not None else part
-        )
-        _write_state(_with_marker(merged, run_key, batch_id), users_dir)
-        if run_key is not None:
-            _record_applied_batch(users_dir, run_key, batch_id)
+    _merge_store(hll_registers(batch), batch_id, state_dir + "_regs", run_key, max_merge)
+    _merge_store(
+        batch.select("user_id"), batch_id, state_dir + "_users", run_key, DataFrame.distinct
+    )
 
 
 def hll_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1119,8 +1022,8 @@ def ivf_occupancy_sink(
     the FROZEN literal quantizer (the same cents list the batch audit
     trains; in production frozen from the index build, the
     drift_monitor frozen-grid convention) via the zero-shuffle
-    ivf_assign map stage, collapses to per-cell count partials, and
-    merges BY ADDITION under the (run_key, batch_id) replay guard.
+    ivf_assign map stage, becomes one-row per-cell count partials, and
+    merges BY ADDITION through _merge_store.
     ivf_balance_view() serves the state through the SAME
     ivf_balance_from_occ rollup, so an index operator watches cell
     skew grow micro-batch by micro-batch — a hot cell shows up here
@@ -1128,25 +1031,9 @@ def ivf_occupancy_sink(
     does. Input schema: (vec_id, label, embedding)."""
     from ..operators.similarity import ivf_assign
 
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
     assigned, _ = ivf_assign(batch, k_clusters=len(cents), cents=cents)
-    part = assigned.groupBy("cluster_id").agg(
-        F.count("*").cast("long").alias("n_vecs")
-    )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("cluster_id")
-        .agg(F.sum("n_vecs").cast("long").alias("n_vecs"))
-        if existing is not None
-        else part
-    )
-    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+    part = assigned.select("cluster_id", F.lit(1).cast("long").alias("n_vecs"))
+    _merge_store(part, batch_id, state_dir, run_key, _summed(["cluster_id"], "n_vecs"))
 
 
 def ivf_balance_view(spark: SparkSession, state_dir: str, k: int) -> DataFrame:
@@ -1213,13 +1100,16 @@ def lateness_monitor_sink(
     unwatermarked per-window counts — the conservation law the
     equivalence test pins.
 
-    Store-swap ORDER is load-bearing: the panel store swaps FIRST, the
-    watermark store SECOND. A crash between the two followed by
-    at-least-once re-delivery re-applies only the watermark (a pure
+    Store-publish ORDER is load-bearing: the panel store publishes
+    FIRST, the watermark store SECOND. A crash between the two followed
+    by at-least-once re-delivery re-applies only the watermark (a pure
     monotone MAX — idempotent and classification-free); the reverse
     order would re-classify the batch against a watermark its own rows
-    advanced, double-dropping borderline rows. Each store carries the
-    standard replay guard (embedded marker + sidecar, per-store dir).
+    advanced, double-dropping borderline rows. Both stores merge
+    through _merge_store, each with its own replay guard. The
+    watermark is read before either, with a view's read-side recovery,
+    because the panel classifies against it. A batch without rows
+    writes no watermark row.
 
     Scale shape: the panel is |windows| rows (calendar-sized), the
     watermark store is 1 row, and the per-batch work is one narrow
@@ -1227,62 +1117,29 @@ def lateness_monitor_sink(
     partials. Input schema: (ts_ms BIGINT)."""
     spark = batch.sparkSession
     wm_dir, panel_dir = state_dir + "_wm", state_dir + "_panel"
+    # read-side recovery, as the views do: the panel classifies against
+    # the stored watermark before either store's _merge_store runs
     _recover_incomplete_swap(spark, wm_dir)
-    _recover_incomplete_swap(spark, panel_dir)
     stored = _read_state_or_none(spark, wm_dir)
-    wm = None
-    if stored is not None:
-        row = stored.agg(F.max("wm_ms").alias("w")).head()
-        wm = row["w"]
-    # panel FIRST (see docstring)
-    if run_key is None or batch_id > _last_applied_batch(panel_dir, run_key):
-        late = (
-            F.col("ts_ms") < F.lit(wm) if wm is not None else F.lit(False)
-        )
-        part = (
-            batch.select(
-                (F.floor(F.col("ts_ms") / window_ms).cast("long") * window_ms).alias(
-                    "window_start_ms"
-                ),
-                late.cast("long").alias("is_late"),
-            )
-            .groupBy("window_start_ms")
-            .agg(
-                F.sum(1 - F.col("is_late")).cast("long").alias("admitted"),
-                F.sum("is_late").cast("long").alias("dropped_late"),
-            )
-        )
-        existing = _read_state_or_none(spark, panel_dir)
-        merged = (
-            existing.unionByName(part)
-            .groupBy("window_start_ms")
-            .agg(
-                F.sum("admitted").cast("long").alias("admitted"),
-                F.sum("dropped_late").cast("long").alias("dropped_late"),
-            )
-            if existing is not None
-            else part
-        )
-        _write_state(_with_marker(merged, run_key, batch_id), panel_dir)
-        if run_key is not None:
-            _record_applied_batch(panel_dir, run_key, batch_id)
+    wm = None if stored is None else stored.agg(F.max("wm_ms")).head()[0]
+    late = (F.col("ts_ms") < F.lit(wm) if wm is not None else F.lit(False)).cast("long")
+    panel = batch.select(
+        (F.floor(F.col("ts_ms") / window_ms).cast("long") * window_ms).alias(
+            "window_start_ms"
+        ),
+        (1 - late).alias("admitted"),
+        late.alias("dropped_late"),
+    )
+    _merge_store(
+        panel, batch_id, panel_dir, run_key, _summed(["window_start_ms"], "admitted", "dropped_late")
+    )
+
     # watermark SECOND: monotone max(stored, batch max - delay)
-    if run_key is None or batch_id > _last_applied_batch(wm_dir, run_key):
-        mx = batch.agg(F.max("ts_ms").alias("m")).head()["m"]
-        cand = [v for v in (wm, (mx - delay_ms) if mx is not None else None)
-                if v is not None]
-        new_wm = max(cand) if cand else None
-        if new_wm is not None:
-            _write_state(
-                _with_marker(
-                    spark.createDataFrame([(int(new_wm),)], "wm_ms long"),
-                    run_key,
-                    batch_id,
-                ),
-                wm_dir,
-            )
-        if run_key is not None:
-            _record_applied_batch(wm_dir, run_key, batch_id)
+    def max_merge(rows: DataFrame) -> DataFrame:
+        return rows.agg(F.max("wm_ms").alias("wm_ms")).where(F.col("wm_ms").isNotNull())
+
+    newest = batch.agg((F.max("ts_ms") - delay_ms).alias("wm_ms"))
+    _merge_store(newest, batch_id, wm_dir, run_key, max_merge)
 
 
 def lateness_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1389,35 +1246,19 @@ def volume_monitor_sink(
     identity over equal count matrices — the drift_monitor_sink
     pattern with a different shared rollup.
 
-    Scale shape: the batch collapses to ≤ |types|·|days| partials
-    BEFORE touching state (the shuffle carries a string and a small
-    int); the merge is the incremental_rollup read-merge-swap with the
-    same crash recovery + (run_key, batch_id) replay guard. One state
+    Scale shape: each row is a one-row (event_type, day_idx) count
+    partial (the shuffle carries a string and a small int; map-side
+    aggregation collapses the batch to ≤ |types|·|days| rows per
+    partition), summed into the state through _merge_store. One state
     serves BOTH charts (and any future consumer of the daily-volume
     matrix) — the monitor cost is paid once per micro-batch, not per
     chart. Input schema: (ts_ms long, event_type string)."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
-    part = (
-        batch.select(
-            "event_type", F.expr("ts_ms div 86400000").alias("day_idx")
-        )
-        .groupBy("event_type", "day_idx")
-        .agg(F.count("*").cast("long").alias("c"))
+    part = batch.select(
+        "event_type",
+        F.expr("ts_ms div 86400000").alias("day_idx"),
+        F.lit(1).cast("long").alias("c"),
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("c").cast("long").alias("c"))
-        if existing is not None
-        else part
-    )
-    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+    _merge_store(part, batch_id, state_dir, run_key, _summed(["event_type", "day_idx"], "c"))
 
 
 def _volume_daily(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1471,40 +1312,25 @@ def lifetime_monitor_sink(
     qids call (km_from_lifetimes / logrank_from_lifetimes), so
     streamed ≡ batch is an identity over equal lifetime tables.
 
-    Scale shape: the batch collapses to ≤ |batch users| partials
-    BEFORE touching state (the shuffle carries three small ints); the
-    state is user-cardinality — the standard sessionization state
-    class, partitioned parquet under read-merge-swap with the same
-    crash recovery. Censoring is decided at VIEW time from the
-    state's own max day (a user whose last event touches the newest
-    observed day is censored), so the monitor needs no clock. Input
-    schema: (ts_ms long, user_id long)."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
-    part = (
-        batch.select("user_id", F.expr("ts_ms div 86400000").alias("day_idx"))
-        .groupBy("user_id")
-        .agg(
-            F.min("day_idx").cast("long").alias("first_idx"),
-            F.max("day_idx").cast("long").alias("last_idx"),
-        )
-    )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("user_id")
-        .agg(
+    Scale shape: each row is a one-day (first_idx, last_idx) span of
+    its user (the shuffle carries three small ints; map-side
+    aggregation collapses the batch to ≤ |batch users| rows per
+    partition); the state is user-cardinality — the standard
+    sessionization state class, merged through _merge_store.
+    Censoring is decided at VIEW time from the state's own max day (a
+    user whose last event touches the newest observed day is
+    censored), so the monitor needs no clock. Input schema: (ts_ms
+    long, user_id long)."""
+
+    def span_merge(rows: DataFrame) -> DataFrame:
+        return rows.groupBy("user_id").agg(
             F.min("first_idx").cast("long").alias("first_idx"),
             F.max("last_idx").cast("long").alias("last_idx"),
         )
-        if existing is not None
-        else part
-    )
-    _write_state(_with_marker(merged, run_key, batch_id), state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+
+    day = F.expr("ts_ms div 86400000")
+    part = batch.select("user_id", day.alias("first_idx"), day.alias("last_idx"))
+    _merge_store(part, batch_id, state_dir, run_key, span_merge)
 
 
 def _lifetimes(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -109,6 +109,29 @@ def test_modularity_is_bounded_and_decomposes(spark):
         assert lp_sizes == mod_sizes
 
 
+def test_modularity_builds_the_neighbor_frame_once(spark, duck, monkeypatch):
+    """j_modularity's label propagation reads the same neighbor leaf as
+    its edge and degree rollups: one _sym_neighbors build per qid
+    build (two builds left only a persist to keep the trade-flow
+    aggregation over lineitem from running twice). The result still
+    matches the DuckDB oracle at the suite SF."""
+    from aprsdb_spark.queries import analytics
+    from aprsdb_spark.registry import ORACLE
+    from tests.conftest import compare_query
+
+    builds = []
+    real = analytics._sym_neighbors
+
+    def counted(t):
+        builds.append(t)
+        return real(t)
+
+    monkeypatch.setattr(analytics, "_sym_neighbors", counted)
+    qfn = QUERIES["j_modularity"]
+    assert compare_query(spark, duck, qfn, ORACLE["j_modularity"]) > 0
+    assert len(builds) == 1
+
+
 def test_connected_components_converged_and_consistent(spark):
     from aprsdb_spark.queries.analytics import _sym_neighbors
     from aprsdb_spark.tables import load as tload

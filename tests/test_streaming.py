@@ -5,6 +5,7 @@ exists for streaming — these pin the semantics."""
 from __future__ import annotations
 
 import shutil
+from datetime import date
 from pathlib import Path
 
 import pytest
@@ -640,86 +641,6 @@ def test_ann_ingest_survives_lost_sidecar_and_orders_conflicts(spark, tmp_path):
     assert len(won1) == 1
 
 
-def test_replay_guard_survives_lost_sidecar(spark, tmp_path):
-    """The r7 ADVICE double-apply window: a crash AFTER the state swap
-    but BEFORE the sidecar marker write used to make the retried
-    micro-batch re-merge its sums. The marker is now also embedded in
-    the state parquet itself (same write as the data), so deleting the
-    sidecar — simulating exactly that crash — must NOT let a re-applied
-    batch double-count."""
-    src = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        F.expr("CAST(ts AS DATE)").alias("day"), "value", "event_id"
-    )
-    batch0 = src.where(F.col("event_id") % 2 == 0)
-    state_dir = str(tmp_path / "state")
-    S.incremental_rollup_sink(batch0, 0, state_dir, run_key="ck")
-    want = {
-        r["day"]: (r["n"], float(r["s"]))
-        for r in spark.read.parquet(state_dir).collect()
-    }
-    # crash window: swap completed, sidecar never written
-    shutil.rmtree(state_dir + "_meta")
-    assert S._last_applied_batch(state_dir, "ck") == 0, "embedded marker unread"
-    S.incremental_rollup_sink(batch0, 0, state_dir, run_key="ck")  # retry
-    again = {
-        r["day"]: (r["n"], float(r["s"]))
-        for r in spark.read.parquet(state_dir).collect()
-    }
-    assert again == want, "post-swap retry re-applied: sums double-counted"
-    # a different run_key is a deliberate reprocess and must still apply
-    assert S._last_applied_batch(state_dir, "other") == -1
-
-
-def test_replay_guard_survives_crash_mid_swap(spark, tmp_path):
-    """The r8 ADVICE window: a crash DURING the state-dir overwrite
-    leaves PARTIAL state whose surviving rows already carry the new
-    batch marker — trusting that marker would skip the retry and
-    freeze truncated state forever. Two defenses under test: the
-    embedded marker is only trusted alongside `_SUCCESS`, and the next
-    sink call first redoes the swap from the complete `_next` staging
-    dir. Simulated worst case: partial main dir AND a sidecar that
-    still points at the previous batch (the crash beat the sidecar
-    write too)."""
-    import json
-    import os
-
-    src = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        F.expr("CAST(ts AS DATE)").alias("day"), "value", "event_id"
-    )
-    batch0 = src.where(F.col("event_id") % 2 == 0)
-    batch1 = src.where(F.col("event_id") % 2 == 1)
-    state_dir = str(tmp_path / "state")
-    S.incremental_rollup_sink(batch0, 0, state_dir, run_key="ck")
-    S.incremental_rollup_sink(batch1, 1, state_dir, run_key="ck")
-    want = {
-        r["day"]: (r["n"], float(r["s"]))
-        for r in spark.read.parquet(state_dir).collect()
-    }
-    # crash mid-swap of batch 1: main dir partial (no _SUCCESS, a data
-    # file gone), sidecar never updated past batch 0, _next complete
-    os.remove(os.path.join(state_dir, "_SUCCESS"))
-    parts = [f for f in os.listdir(state_dir) if f.endswith(".parquet")]
-    os.remove(os.path.join(state_dir, parts[0]))
-    with open(os.path.join(state_dir + "_meta", "last_batch.json"), "w") as f:
-        json.dump({"run_key": "ck", "batch_id": 0}, f)
-    # partial state's embedded marker must NOT count as applied
-    assert S._last_applied_batch(state_dir, "ck") == 0
-    # the retried micro-batch first recovers the swap, then the
-    # now-trustworthy embedded marker (batch 1) suppresses the re-apply
-    S.incremental_rollup_sink(batch1, 1, state_dir, run_key="ck")
-    again = {
-        r["day"]: (r["n"], float(r["s"]))
-        for r in spark.read.parquet(state_dir).collect()
-    }
-    assert again == want, "crash-mid-swap retry lost or double-counted state"
-    # and the stream continues normally from recovered state
-    S.incremental_rollup_sink(batch0.limit(0), 2, state_dir, run_key="ck")
-    assert {
-        r["day"]: (r["n"], float(r["s"]))
-        for r in spark.read.parquet(state_dir).collect()
-    } == want
-
-
 def _station_batch(spark, rows):
     """A static stations-sink input: (src, recv_ts from epoch ms, lat, lon)."""
     df = spark.createDataFrame(
@@ -1319,67 +1240,6 @@ def test_quality_gate_matches_batch_wilson(spark, tmp_path):
     assert got == want
 
 
-def test_new_monitor_sinks_recover_crash_mid_swap(spark, tmp_path):
-    """Crash-mid-swap recovery for the two r12 sinks (drift monitor +
-    quality gate): after a completed batch, simulate a crash DURING the
-    _next -> main overwrite by deleting the main dir's _SUCCESS; the
-    next sink call must restore the full state from _next before
-    applying (no truncated-state freeze, no double count)."""
-    import os
-
-    from aprsdb_spark.tables import load as tload
-
-    sf = "/root/testdata/sf0.001"
-    # --- drift monitor
-    ev = tload(spark, sf).events.select("ts_ms", "value", "event_id")
-    v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
-    lo, hi = ev.select(F.min(v6), F.max(v6)).collect()[0]
-    halves = [ev.where(F.col("event_id") % 2 == k).select("ts_ms", "value") for k in range(2)]
-    state = str(tmp_path / "drift")
-    S.drift_monitor_sink(halves[0], 0, state, int(lo), int(hi), run_key="ck")
-    os.remove(os.path.join(state, "_SUCCESS"))  # crash window mid-swap
-    S.drift_monitor_sink(halves[1], 1, state, int(lo), int(hi), run_key="ck")
-    got = {
-        (r.day_idx, r.bucket): r.oc
-        for r in spark.read.parquet(state).select("day_idx", "bucket", "oc").collect()
-    }
-    want = {
-        (r.day_idx, r.bucket): r.oc
-        for r in ev.select(
-            F.expr("ts_ms div 86400000").alias("day_idx"), v6.alias("v6")
-        )
-        .select(
-            "day_idx",
-            F.expr(f"((v6 - {int(lo)}) * 10) div ({int(hi)} - {int(lo)} + 1)").alias("bucket"),
-        )
-        .groupBy("day_idx", "bucket")
-        .agg(F.count("*").cast("long").alias("oc"))
-        .collect()
-    }
-    assert got == want
-    # --- quality gate
-    docs = spark.read.parquet(sf + "/documents.parquet").select("doc_id", "source", "n_chars", "text")
-    halves = [
-        docs.where(F.col("doc_id") % 2 == k).select("source", "n_chars", "text")
-        for k in range(2)
-    ]
-    qstate = str(tmp_path / "qgate")
-    S.quality_gate_sink(halves[0], 0, qstate, run_key="qk")
-    os.remove(os.path.join(qstate, "_SUCCESS"))
-    S.quality_gate_sink(halves[1], 1, qstate, run_key="qk")
-    per = {r.source: (r.n, r.x) for r in spark.read.parquet(qstate).select("source", "n", "x").collect()}
-    from aprsdb_spark.queries.governance import wilson_defect_col
-
-    want_q = {
-        r.source: (r.n, r.x)
-        for r in docs.select("source", wilson_defect_col().alias("d"))
-        .groupBy("source")
-        .agg(F.count("*").cast("long").alias("n"), F.sum("d").cast("long").alias("x"))
-        .collect()
-    }
-    assert per == want_q
-
-
 def test_card_monitor_matches_batch_data_card(spark, tmp_path):
     """Streaming data-card maintenance (§2.I): replaying the documents
     table in THREE micro-batches must leave part stores whose
@@ -1415,8 +1275,7 @@ def test_card_monitor_matches_batch_data_card(spark, tmp_path):
         .groupBy("source", "lang")
         .agg(F.sum("n").cast("long").alias("n"))
     )
-    S._with_marker(merged, "ck", 1).write.mode("overwrite").parquet(lang_dir + "_next")
-    spark.read.parquet(lang_dir + "_next").write.mode("overwrite").parquet(lang_dir)
+    S._write_state(S._with_marker(merged, "ck", 1), lang_dir)
     S._record_applied_batch(lang_dir, "ck", 1)
     S.card_monitor_sink(thirds[1], 1, state, run_key="ck")
     S.card_monitor_sink(thirds[2], 2, state, run_key="ck")
@@ -1607,65 +1466,6 @@ def test_ivf_balance_view_rejects_truncating_k(spark, tmp_path):
     with pytest.raises(ValueError, match="smaller than the quantizer"):
         S.ivf_balance_view(spark, state, k=4).collect()
     assert S.ivf_balance_view(spark, state, k=16).count() == 16
-
-
-def test_two_monitor_sinks_one_run_key_crash_between_swaps(spark, tmp_path):
-    """VERDICT r13 item 6: the monitors' recovery tests all run
-    single-stream, but a production foreachBatch typically fans one
-    micro-batch into SEVERAL sinks under one run_key — and a crash
-    BETWEEN their swaps leaves sink A at batch 1 and sink B at batch 0.
-    At-least-once restart re-delivers batch 1 to BOTH; the per-store
-    guards must no-op A and apply B, and a second crash DURING B's
-    swap (main-dir _SUCCESS lost) must recover from _next — both
-    states must equal the one-shot batch audits afterwards."""
-    import os
-
-    from aprsdb_spark.registry import QUERIES, load_all
-    from aprsdb_spark.tables import load as tload
-
-    load_all()
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(sf + "/documents.parquet").select("doc_id", "text")
-    ev = tload(spark, sf).events.select("event_id", "user_id")
-    doc_halves = [
-        docs.where(F.col("doc_id") % 2 == k).select("text") for k in range(2)
-    ]
-    ev_halves = [
-        ev.where(F.col("event_id") % 2 == k).select("user_id") for k in range(2)
-    ]
-    cms_state = str(tmp_path / "pair_cms")
-    hll_state = str(tmp_path / "pair_hll")
-    run_key = "pair"
-    # batch 0: both sinks apply cleanly
-    S.cms_monitor_sink(doc_halves[0], 0, cms_state, run_key=run_key)
-    S.hll_monitor_sink(ev_halves[0], 0, hll_state, run_key=run_key)
-    # batch 1: cms swaps fully, then the driver dies BEFORE hll runs
-    S.cms_monitor_sink(doc_halves[1], 1, cms_state, run_key=run_key)
-    cms_before = sorted(
-        (r.d, r.bucket, r.c)
-        for r in spark.read.parquet(cms_state + "_cells")
-        .select("d", "bucket", "c")
-        .collect()
-    )
-    # restart: batch 1 re-delivered to BOTH sinks; additionally the hll
-    # swap itself crashes mid-overwrite (lost _SUCCESS) and is replayed
-    S.cms_monitor_sink(doc_halves[1], 1, cms_state, run_key=run_key)
-    S.hll_monitor_sink(ev_halves[1], 1, hll_state, run_key=run_key)
-    os.remove(os.path.join(hll_state + "_regs", "_SUCCESS"))
-    S.hll_monitor_sink(ev_halves[1], 1, hll_state, run_key=run_key)
-    cms_after = sorted(
-        (r.d, r.bucket, r.c)
-        for r in spark.read.parquet(cms_state + "_cells")
-        .select("d", "bucket", "c")
-        .collect()
-    )
-    assert cms_before == cms_after, "guard failed: cms double-applied batch 1"
-    want_cms = sorted(tuple(r) for r in QUERIES["j_cms_sketch"](spark, sf).collect())
-    got_cms = sorted(tuple(r) for r in S.cms_current_view(spark, cms_state).collect())
-    assert got_cms == want_cms
-    want_hll = sorted(tuple(r) for r in QUERIES["j_hll_portable"](spark, sf).collect())
-    got_hll = sorted(tuple(r) for r in S.hll_current_view(spark, hll_state).collect())
-    assert got_hll == want_hll
 
 
 def test_monitor_state_is_split_invariant(spark, tmp_path):
@@ -2091,3 +1891,218 @@ def test_lifetime_monitor_split_invariance(spark, tmp_path):
         .collect()
     )
     assert m(s2) == m(s3)
+
+
+# --- every overwrite store: crash mid-publish and re-delivery -----------
+#
+# Each overwrite sink folds every one of its stores through
+# S._merge_store. One case per sink: how to call it, how to build its
+# input, two tiny batches, and the suffixes of the stores it keeps under
+# its state dir. The two tests below run once per store.
+
+
+def _frame(schema):
+    return lambda spark, rows: spark.createDataFrame(rows, schema)
+
+
+_HOUR, _DAY, _T0 = 3_600_000, 86_400_000, 1_704_067_200_000
+_STORE_SINKS = {
+    "upsert_stations_sink": (
+        S.upsert_stations_sink,
+        _station_batch,
+        *_STATION_BATCHES[:2],
+        [""],
+    ),
+    "incremental_rollup_sink": (
+        S.incremental_rollup_sink,
+        _frame("day date, value double"),
+        [(date(2024, 1, 1), 1.5), (date(2024, 1, 2), 2.0)],
+        [(date(2024, 1, 1), 3.25), (date(2024, 1, 3), None)],
+        [""],
+    ),
+    "cdc_apply_sink": (
+        S.cdc_apply_sink,
+        _frame("user_id long, ts_ms long, event_id long, value double, op string"),
+        [(1, 10, 1, 1.0, "I"), (2, 11, 2, 2.0, "I")],
+        [(1, 20, 3, 5.0, "U"), (2, 21, 4, None, "D"), (3, 22, 5, 7.0, "I")],
+        [""],
+    ),
+    "leakage_monitor_sink": (
+        S.leakage_monitor_sink,
+        _frame("doc_id long, text string"),
+        [(i, f"text {i % 3}") for i in range(6)],
+        [(i, f"text {i % 4}") for i in range(6, 12)],
+        [""],
+    ),
+    "drift_monitor_sink": (
+        lambda b, i, d, run_key: S.drift_monitor_sink(b, i, d, 0, 999_999, run_key=run_key),
+        _frame("ts_ms long, value double"),
+        [(1000, 0.15), (1000 + _DAY, 0.55)],
+        [(2000, 0.95), (2000 + _DAY, -3.0)],
+        [""],
+    ),
+    "quality_gate_sink": (
+        S.quality_gate_sink,
+        _frame("source string, n_chars long, text string"),
+        [("web", 150, " ".join(["w"] * 25)), ("wiki", 20, "too short")],
+        [("web", 50, "short"), ("wiki", 300, " ".join(["t"] * 30))],
+        [""],
+    ),
+    "card_monitor_sink": (
+        S.card_monitor_sink,
+        _frame("source string, lang string, n_chars long, text string"),
+        [("web", "en", 11, "hello world"), ("wiki", "de", 9, "hallo welt")],
+        [("web", "fr", 11, "hello world"), ("web", "en", 7, "bye now")],
+        ["_lang", "_digest", "_token"],
+    ),
+    "cms_monitor_sink": (
+        S.cms_monitor_sink,
+        _frame("text string"),
+        [("a b c a",), ("b d",)],
+        [("a e",), ("c c d",)],
+        ["_cells", "_truth"],
+    ),
+    "hll_monitor_sink": (
+        S.hll_monitor_sink,
+        _frame("user_id long"),
+        [(i,) for i in range(8)],
+        [(i,) for i in range(5, 14)],
+        ["_regs", "_users"],
+    ),
+    "ivf_occupancy_sink": (
+        lambda b, i, d, run_key: S.ivf_occupancy_sink(
+            b, i, d, [(0, [1.0, 0.0]), (1, [0.0, 1.0])], run_key=run_key
+        ),
+        _frame("vec_id long, label string, embedding array<float>"),
+        [(1, "a", [1.0, 0.1]), (2, "b", [0.1, 1.0])],
+        [(3, "a", [0.9, 0.2]), (4, "a", [2.0, 0.0])],
+        [""],
+    ),
+    "lateness_monitor_sink": (
+        S.lateness_monitor_sink,
+        _frame("ts_ms long"),
+        [(_T0,), (_T0 + _HOUR,)],
+        [(_T0 + 3 * _HOUR,), (_T0 - 2 * _HOUR,)],
+        ["_panel", "_wm"],
+    ),
+    "volume_monitor_sink": (
+        S.volume_monitor_sink,
+        _frame("ts_ms long, event_type string"),
+        [(1000, "click"), (1000 + _DAY, "view")],
+        [(2000, "click"), (5000 + 2 * _DAY, "click")],
+        [""],
+    ),
+    "lifetime_monitor_sink": (
+        S.lifetime_monitor_sink,
+        _frame("ts_ms long, user_id long"),
+        [(1000, 1), (1000 + _DAY, 2)],
+        [(2000 + 3 * _DAY, 1), (500, 3)],
+        [""],
+    ),
+}
+_APPEND_SINKS = {"dedup_ingest_sink", "ann_ingest_sink"}
+_STORES = [(name, store) for name, case in _STORE_SINKS.items() for store in case[4]]
+
+
+def _run_two_batches(spark, tmp_path, name):
+    """Apply batch 0 and batch 1 of a case under run_key "ck"; return
+    the sink call, batch 1 and the state root."""
+    call, make, rows0, rows1, _ = _STORE_SINKS[name]
+    root = str(tmp_path / "state")
+    call(make(spark, rows0), 0, root, run_key="ck")
+    b1 = make(spark, rows1)
+    call(b1, 1, root, run_key="ck")
+    return call, b1, root
+
+
+def _snapshot(spark, tmp_path):
+    """Every directory the sink wrote (stores and the leakage alerts,
+    not the `_next` and `_meta` siblings) -> its rows, markers dropped."""
+    import os
+
+    out = {}
+    for name in sorted(os.listdir(tmp_path)):
+        if not name.endswith(("_next", "_meta")):
+            df = spark.read.parquet(str(tmp_path / name)).drop("_run_key", "_batch_id")
+            out[name] = sorted((tuple(r) for r in df.collect()), key=repr)
+    return out
+
+
+@pytest.mark.parametrize("name,store", _STORES, ids=[n + s for n, s in _STORES])
+def test_store_recovers_crash_mid_publish(spark, tmp_path, name, store):
+    """A crash while batch 1 is published to one store leaves its main
+    dir without `_SUCCESS` and short of a data file, and the sidecar
+    still at batch 0. The re-delivered batch 1 must first republish the
+    store from its complete `_next` and then skip the batch on the
+    embedded marker: every store ends as it was after batch 1, with the
+    same files (no re-apply, no truncated state). Batch 2 then applies."""
+    import os
+
+    call, b1, root = _run_two_batches(spark, tmp_path, name)
+    want = _snapshot(spark, tmp_path)
+    d = root + store
+    files = sorted(os.listdir(d))
+    os.remove(os.path.join(d, "_SUCCESS"))
+    os.remove(os.path.join(d, next(n for n in files if n.endswith(".parquet"))))
+    S._record_applied_batch(d, "ck", 0)
+    assert S._last_applied_batch(d, "ck") == 0  # partial state's marker untrusted
+    call(b1, 1, root, run_key="ck")
+    assert sorted(os.listdir(d)) == files
+    assert _snapshot(spark, tmp_path) == want
+    # and the stream goes on from the recovered state
+    call(b1, 2, root, run_key="ck")
+    assert S._last_applied_batch(d, "ck") == 2 and sorted(os.listdir(d)) != files
+
+
+@pytest.mark.parametrize("name,store", _STORES, ids=[n + s for n, s in _STORES])
+def test_store_skips_redelivered_batch(spark, tmp_path, name, store):
+    """A re-delivered (run_key, batch_id) is a no-op for every store:
+    through the sidecar, and through the marker embedded in the state
+    rows once the sidecar is lost (a crash after the publish, before
+    the sidecar write). No store is rewritten: its files stay the same,
+    which also catches a re-apply of an idempotent merge."""
+    import os
+
+    call, b1, root = _run_two_batches(spark, tmp_path, name)
+    stores = {n[: -len("_next")] for n in os.listdir(tmp_path) if n.endswith("_next")}
+    assert stores == {"state" + s for s in _STORE_SINKS[name][4]}, "store list is stale"
+    want = _snapshot(spark, tmp_path)
+    d = root + store
+    files = sorted(os.listdir(d))
+    call(b1, 1, root, run_key="ck")
+    shutil.rmtree(d + "_meta")
+    assert S._last_applied_batch(d, "ck") == 1
+    call(b1, 1, root, run_key="ck")
+    assert sorted(os.listdir(d)) == files
+    assert _snapshot(spark, tmp_path) == want
+
+
+def test_every_sink_has_crash_and_replay_cases():
+    """Every public foreachBatch sink either folds its stores through
+    _merge_store and is a case of the two tests above, or is one of the
+    append-only sinks — a new sink cannot skip crash/replay coverage."""
+    import inspect
+
+    sinks = {
+        n
+        for n, f in inspect.getmembers(S, inspect.isfunction)
+        if n.endswith("_sink") and not n.startswith("_") and f.__module__ == S.__name__
+    }
+    assert sinks == set(_STORE_SINKS) | _APPEND_SINKS
+
+
+def test_lateness_watermark_store_writes_no_row_for_an_empty_batch(spark, tmp_path):
+    """A batch without rows advances no watermark: the first, empty
+    batch leaves the watermark store without a row, so the next batch
+    admits everything."""
+    state = str(tmp_path / "late")
+    empty = spark.createDataFrame([], "ts_ms long")
+    S.lateness_monitor_sink(empty, 0, state, run_key="ck")
+    assert spark.read.parquet(state + "_wm").count() == 0
+    rows = spark.createDataFrame([(_T0,), (_T0 - 5 * _HOUR,)], "ts_ms long")
+    S.lateness_monitor_sink(rows, 1, state, run_key="ck")
+    panel = {r["window_start_ms"]: (r["admitted"], r["dropped_late"])
+             for r in S.lateness_view(spark, state).collect()}
+    assert panel == {_T0: (1, 0), _T0 - 5 * _HOUR: (1, 0)}
+    wm = [r["wm_ms"] for r in spark.read.parquet(state + "_wm").collect()]
+    assert wm == [_T0 - 600_000]
