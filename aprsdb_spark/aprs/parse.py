@@ -1,8 +1,8 @@
 """APRS packet parsing, expression-first.
 
 Everything regular (TNC2 header, uncompressed positions, weather,
-telemetry, messages, status) is pure `pyspark.sql.functions` — scales
-linearly, no Python in the hot path. Only the two byte-twiddling
+telemetry, messages, status) is pure Spark SQL expressions, written
+once as SQL text — scales linearly, no Python in the hot path. Only the two byte-twiddling
 formats (base-91 compressed positions, Mic-E) drop to an Arrow-batched
 pandas UDF (decoders.py).
 
@@ -40,121 +40,6 @@ _POS_RE = r"(\d{2})(\d{2}\.\d{2})([NS])(.)(\d{3})(\d{2}\.\d{2})([EW])(.)"
 _POS_ANCHORED_RE = "^" + _POS_RE + "(.*)$"
 
 
-def _null_d() -> Column:
-    return F.lit(None).cast("double")
-
-
-def parse_tnc2(raw: Column) -> Column:
-    """raw line -> struct(src, dst, path array, q_construct, gate, dti,
-    info). Pure regexp/split/filter — no UDF (SURVEY.md h_str_parse_tnc2);
-    the q-construct `filter` lambda is CodegenFallback, so the Project
-    holding it stays out of whole-stage codegen."""
-    src = F.regexp_extract(raw, _HEADER_RE, 1)
-    dst = F.regexp_extract(raw, _HEADER_RE, 2)
-    path_str = F.regexp_extract(raw, _HEADER_RE, 3)
-    info = F.regexp_extract(raw, _HEADER_RE, 4)
-    path = F.when(
-        path_str == "", F.array().cast("array<string>")
-    ).otherwise(F.slice(F.split(path_str, ","), 2, 1000))
-    q = F.try_element_at(F.filter(path, lambda x: x.rlike("^qA")), F.lit(1))
-    # the igate call follows the q-construct in the path
-    qpos = F.array_position(path, q)
-    gate = F.when(qpos > 0, F.try_element_at(path, (qpos + 1).cast("int")))
-    dti = F.substring(info, 1, 1)
-    return F.struct(
-        src.alias("src"),
-        dst.alias("dst"),
-        path.alias("path"),
-        q.alias("q_construct"),
-        gate.alias("gate"),
-        F.when(info != "", dti).alias("dti"),
-        info.alias("info"),
-    )
-
-
-def _pos_fields(body: Column) -> dict[str, Column]:
-    """Decode an uncompressed position body (already stripped of DTI and
-    optional timestamp): ddmm.mmN<sym_table>dddmm.mmE<symbol>comment."""
-    m = lambda g: F.regexp_extract(body, _POS_ANCHORED_RE, g)  # noqa: E731
-    matched = m(3) != ""
-    lat = (m(1).try_cast("double") + m(2).try_cast("double") / 60.0) * F.when(
-        m(3) == "S", -1.0
-    ).otherwise(1.0)
-    lon = (m(5).try_cast("double") + m(6).try_cast("double") / 60.0) * F.when(
-        m(7) == "W", -1.0
-    ).otherwise(1.0)
-    # trailing data: course/speed "ccc/sss", altitude "/A=nnnnnn" (§6)
-    after = m(9)
-    cse = F.regexp_extract(after, r"^(\d{3})/(\d{3})", 1)
-    spd = F.regexp_extract(after, r"^(\d{3})/(\d{3})", 2)
-    alt_ft = F.regexp_extract(body, r"/A=(\d{6})", 1)
-    return {
-        "latitude": F.when(matched, lat),
-        "longitude": F.when(matched, lon),
-        "symbol_table": F.when(matched, m(4)),
-        "symbol": F.when(matched, m(8)),
-        "course_deg": F.when(cse != "", cse.try_cast("double")),
-        "speed_kmh": F.when(spd != "", spd.try_cast("double") * 1.852),  # knots->km/h
-        "altitude_m": F.when(alt_ft != "", alt_ft.try_cast("double") * 0.3048),
-        "comment": F.when(matched, F.regexp_replace(after, r"^(\d{3})/(\d{3})", "")),
-        "matched": matched,
-    }
-
-
-def _wx_struct(info: Column) -> Column:
-    """Positionless weather `_` (§12): letter-prefixed fixed-width fields
-    c220s004g005t077r000p000P000h50b09900."""
-    g = lambda pat: F.regexp_extract(info, pat, 1)  # noqa: E731
-    num = lambda pat, scale=1.0: F.when(  # noqa: E731
-        g(pat) != "", g(pat).try_cast("double") * scale
-    )
-    return F.struct(
-        F.when(g(r"c(\d{3})") != "", g(r"c(\d{3})").try_cast("int")).alias("wind_dir"),
-        num(r"s(\d{3})", 1.609344).alias("wind_speed"),  # mph->km/h
-        num(r"g(\d{3})", 1.609344).alias("gust"),
-        num(r"t(-?\d{2,3})").alias("temp_f"),
-        num(r"r(\d{3})", 0.01).alias("rain_1h"),  # hundredths inch
-        num(r"p(\d{3})", 0.01).alias("rain_24h"),
-        num(r"P(\d{3})", 0.01).alias("rain_since_midnight"),
-        F.when(g(r"h(\d{2})") != "", g(r"h(\d{2})").try_cast("int")).alias("humidity"),
-        num(r"b(\d{5})", 0.1).alias("pressure_mb"),  # tenths of mb
-    )
-
-
-def _telemetry_struct(info: Column) -> Column:
-    """T#sss,v1,v2,v3,v4,v5,bbbbbbbb (§13)."""
-    seq = F.regexp_extract(info, r"^T#(\d{1,3})", 1)
-    rest = F.regexp_extract(info, r"^T#\d{1,3},(.*)$", 1)
-    parts = F.split(rest, ",")
-    vals = F.transform(F.slice(parts, 1, 5), lambda x: x.try_cast("double"))
-    bits = F.try_element_at(parts, F.lit(6))
-    return F.when(
-        seq != "",
-        F.struct(seq.try_cast("int").alias("seq"), vals.alias("vals"), bits.alias("bits")),
-    )
-
-
-def _msg_struct(info: Column) -> Column:
-    """:ADDRESSEE:text{msgNo — addressee is 9 chars space-padded (§14);
-    ack/rej replies carry ackNN / rejNN as the text."""
-    addressee = F.trim(F.substring(info, 2, 9))
-    body = F.when(F.substring(info, 11, 1) == ":", F.substring(info, 12, 67))
-    msg_no = F.regexp_extract(body, r"\{([A-Za-z0-9]{1,5})$", 1)
-    text = F.regexp_replace(body, r"\{[A-Za-z0-9]{1,5}$", "")
-    is_ack = body.rlike("^ack[A-Za-z0-9]{1,5}$")
-    is_rej = body.rlike("^rej[A-Za-z0-9]{1,5}$")
-    return F.when(
-        body.isNotNull(),
-        F.struct(
-            addressee.alias("addressee"),
-            text.alias("text"),
-            F.when(msg_no != "", msg_no).alias("msg_no"),
-            is_ack.alias("is_ack"),
-            is_rej.alias("is_rej"),
-        ),
-    )
-
-
 def _sq(pat: str) -> str:
     """Python regex/string -> Spark SQL single-quoted literal. With the
     default escapedStringLiterals=false the SQL lexer consumes one level
@@ -164,11 +49,11 @@ def _sq(pat: str) -> str:
 
 
 def _tnc2_struct_sql(raw: str) -> str:
-    """SQL-text twin of parse_tnc2 (same functions, same argument
-    order): one named_struct carrying src/dst/path/q_construct/gate/
-    dti/info. Built as a pure Python string so a query build pays ONE
-    parse instead of ~80 py4j Column round-trips (measured ~1 ms each
-    on the r16 host)."""
+    """The TNC2 header grammar over the SQL expression `raw`: one
+    named_struct carrying src/dst/path/q_construct/gate/dti/info. Pure
+    regexp/split/filter — no UDF (SURVEY.md h_str_parse_tnc2). Built as
+    a pure Python string so a query build pays ONE parse instead of ~80
+    py4j Column round-trips (measured ~1 ms each on the r16 host)."""
     hdr = _sq(_HEADER_RE)
     src = f"regexp_extract({raw}, {hdr}, 1)"
     dst = f"regexp_extract({raw}, {hdr}, 2)"
@@ -191,8 +76,18 @@ def _tnc2_struct_sql(raw: str) -> str:
     )
 
 
+def parse_tnc2(raw_col: str) -> Column:
+    """Column `raw_col` (raw lines) -> struct(src, dst, path array,
+    q_construct, gate, dti, info). The q-construct `filter` lambda is
+    CodegenFallback, so the Project holding it stays out of whole-stage
+    codegen."""
+    return F.expr(_tnc2_struct_sql(f"`{raw_col}`"))
+
+
 def _pos_fields_sql(body: str) -> dict[str, str]:
-    """SQL-text twin of _pos_fields over an already-stripped body."""
+    """Decode an uncompressed position body (already stripped of DTI and
+    optional timestamp): ddmm.mmN<sym_table>dddmm.mmE<symbol>comment.
+    Trailing data: course/speed "ccc/sss", altitude "/A=nnnnnn" (§6)."""
     pat = _sq(_POS_ANCHORED_RE)
 
     def m(g: int) -> str:
@@ -239,6 +134,9 @@ def _pos_fields_sql(body: str) -> dict[str, str]:
 
 
 def _wx_struct_sql(info: str) -> str:
+    """Positionless weather `_` (§12): letter-prefixed fixed-width fields
+    c220s004g005t077r000p000P000h50b09900."""
+
     def g(pat: str) -> str:
         return f"regexp_extract({info}, {_sq(pat)}, 1)"
 
@@ -273,6 +171,7 @@ def _wx_struct_sql(info: str) -> str:
 
 
 def _telemetry_struct_sql(info: str) -> str:
+    """T#sss,v1,v2,v3,v4,v5,bbbbbbbb (§13)."""
     seq_pat = _sq(r"^T#(\d{1,3})")
     rest_pat = _sq(r"^T#\d{1,3},(.*)$")
     seq = f"regexp_extract({info}, {seq_pat}, 1)"
@@ -287,6 +186,8 @@ def _telemetry_struct_sql(info: str) -> str:
 
 
 def _msg_struct_sql(info: str) -> str:
+    """:ADDRESSEE:text{msgNo — addressee is 9 chars space-padded (§14);
+    ack/rej replies carry ackNN / rejNN as the text."""
     addressee = f"trim(substring({info}, 2, 9))"
     body = (
         f"CASE WHEN substring({info}, 11, 1) = ':' "
@@ -310,12 +211,9 @@ def _msg_struct_sql(info: str) -> str:
 def _packet_select_exprs(raw_col: str, recv_ts_col: str | None) -> tuple[tuple[str, ...], tuple[str, ...]]:
     """The two selectExpr stages of parse_packets, precomputed as SQL
     text (cached per column-name pair — in practice one or two entries).
-    Stage 1 materializes the _h header struct exactly like the previous
-    withColumn form; stage 2 is the wide-frame projection. Identical
-    expressions to the Column-op implementation (same functions, same
-    argument order, same literal types), so values are bit-identical —
-    only the driver-side build cost changes: ~2 parsed expressions
-    instead of ~400 py4j Column round-trips (guide §1.2 'per-task work'
+    Stage 1 materializes the _h header struct; stage 2 is the wide-frame
+    projection. ~2 parsed expressions instead of the ~400 py4j Column
+    round-trips a Column-op build costs (guide §1.2 'per-task work'
     applied to the driver; measured ~0.9 s per build on the r16 host)."""
     raw = f"`{raw_col}`"
     stage1 = ("*", f"{_tnc2_struct_sql(raw)} AS _h")

@@ -136,7 +136,7 @@ def h_str_parse_tnc2(spark: SparkSession, sf_dir: str) -> DataFrame:
     → typed columns. The oracle runs the identical regex in DuckDB.
     `path` re-joins the digi list with ',' (its own source delimiter —
     lossless) so every output column is canonicalizer-safe scalar."""
-    h = parse_tnc2(F.col("raw"))
+    h = parse_tnc2("raw")
     return _packets_df(spark).select(
         "raw",
         F.when(h.getField("src") != "", h.getField("src")).alias("src"),
@@ -647,7 +647,7 @@ def aprs_decode_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas-UDF escape hatch is value-verified — the Spark-side batching
     can't silently reorder or misalign rows without failing the hash."""
     parsed = parse_packets(_read_fixture(spark, "mice_compressed.txt"), recv_ts_col="recv_ts")
-    info = parse_tnc2(F.col("raw")).getField("info")
+    info = parse_tnc2("raw").getField("info")
     enriched = enrich_positions(parsed, info)
     return enriched.select("src", "fmt", "latitude", "longitude", "symbol_table", "symbol")
 

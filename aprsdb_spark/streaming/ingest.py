@@ -119,7 +119,7 @@ def parsed_packet_stream(lines: DataFrame) -> DataFrame:
     """Parse stage + dedup key: payload = info field (APRS-IS dedups on
     (src, payload) ignoring the digi path)."""
     parsed = parse_packets(lines, recv_ts_col="recv_ts")
-    return parsed.withColumn("payload", parse_tnc2(F.col("raw")).getField("info"))
+    return parsed.withColumn("payload", parse_tnc2("raw").getField("info"))
 
 
 def dedup_30s(parsed: DataFrame) -> DataFrame:

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from aprsdb_spark.plans.inspect import count_exchanges, formatted_plan
+from aprsdb_spark.plans.inspect import exchange_nodes, formatted_plan
 from aprsdb_spark.registry import QUERIES, load_all
 from tests.conftest import SF_DIR
 
@@ -139,7 +139,7 @@ def test_temperature_mix_is_a_distribution(spark):
 def test_chunking_has_zero_exchanges(spark):
     """Chunking is a scan-speed narrow explode — any Exchange here would
     shuffle the whole corpus for a per-row computation."""
-    assert count_exchanges(_df(spark, "j_chunk_overlap")) == 0
+    assert exchange_nodes(_df(spark, "j_chunk_overlap")) == {"shuffle": 0, "broadcast": 0}
 
 
 def test_line_dedup_shuffles_digests_not_segments(spark):

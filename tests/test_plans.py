@@ -4,8 +4,8 @@ pruning, dimension broadcasts, top-k without a global sort. A code
 change that silently breaks one of these passes correctness tests and
 then falls over at scale; these tests make the plan part of the spec.
 
-PINNED SPARK VERSION: these tests assert against Spark 4.1.x physical-
-plan STRINGS (exact Exchange counts, codegen substrings like
+PINNED SPARK VERSION: these tests assert against Spark 4.1.x physical
+plans (exact Exchange node counts, codegen substrings like
 'aggregate(zip_with'). A Spark minor-version bump or an AQE default
 change can flip dozens of them at once with zero real regression —
 test_pinned_spark_version below fails FIRST in that event, so a mass
@@ -145,11 +145,11 @@ def test_ivf_assignment_is_narrow(spark):
     (The window-over-explode form cost a k-fold row blowup plus a full
     hash-partition shuffle per assignment pass.)"""
     from aprsdb_spark.operators.similarity import ivf_assign
-    from aprsdb_spark.plans.inspect import count_exchanges
+    from aprsdb_spark.plans.inspect import exchange_nodes
     from aprsdb_spark.tables import load
 
     assigned, _ = ivf_assign(load(spark, SF_DIR).embeddings, k_clusters=8)
-    assert count_exchanges(assigned) == 0
+    assert exchange_nodes(assigned) == {"shuffle": 0, "broadcast": 0}
 
 
 def test_bucketed_allpairs_join_on_sketch(spark):
@@ -226,7 +226,9 @@ def test_release_pipeline_shuffles_hashes_not_text(spark):
     assert exch and all("text#" not in l for l in exch), exch
 
 
-# qids where these physical operators are the POINT, not a smell
+# qids where these physical operators are the POINT, not a smell;
+# test_no_accidental_cartesian_or_row_python fails on a qid listed here
+# whose plan has lost the operator, so each list is exact
 _EXPECTED_BNLJ = {
     "c_join_cross",   # cartesian of two tiny dims
     "c_join_theta",   # pure non-equi join
@@ -258,7 +260,6 @@ _EXPECTED_BNLJ = {
     "j_lift_gains",  # 1-row broadcast pos/n totals onto the decile relation
     "j_median_test",  # 1-row broadcast grand median + margins onto cells
     "j_youden_threshold",  # 1-row broadcast pos/neg totals onto score groups
-    "j_pagerank",  # 1-row broadcast |V| into every iteration's teleport
     "j_histogram_equi",  # 1-row broadcast percentile-boundary array
     "j_hll_portable",  # 1-row broadcast exact-truth cross-join next to the estimate
     "j_ann_recall",  # 1-row broadcast hits x n_exact fuse of the two recall legs
@@ -275,9 +276,6 @@ _EXPECTED_BNLJ = {
     "j_mutual_info",  # 1-row broadcast totals/entropies onto the cell table
     "j_cohen_kappa",  # three 1-row frames over the confusion cells cross-join
     # (plus j_lang_confusion's own broadcast fan-outs, reused verbatim)
-    "j_bfs_distance",  # 1-row literal seed frontier: Catalyst folds the seed's
-    # nk to a constant, the equi condition becomes a filter, and the round-1
-    # broadcast join is left conditionless — build side is O(|V|) state
     # --- r10 additions, all metadata-scale build sides by design:
     "j_chargram_confusion",  # the j_lang_id langs/vocab broadcast fan-out
     "j_f1_macro",  # reuses the confusion cells (j_lang_id fan-out) + 1-row unions
@@ -329,7 +327,6 @@ _EXPECTED_BNLJ = {
     "j_hll_precision_curve",  # 1-row broadcast exact truth per geometry row
     "j_bloom_fpr_curve",  # four 1-row counts fused per size (keys/bits/probes/fp)
     "j_graph_reciprocity",  # 1-row n_edges x 1-row n_reciprocal fuse
-    "j_markov_stationary",  # 1-row broadcast |types| into the it0 seed
     "j_dedup_yield_curve",  # 1-row conditional-count aggregate x 1-row total
     "j_permutation_test",  # 1-row broadcast observed moments onto B replica stats
     "j_ivf_nprobe_curve",  # 1-row broadcast n_exact per depth row
@@ -417,34 +414,18 @@ def test_salted_join_actually_salts(spark):
     assert "_fsalt" in p and "_dsalt" in p, "join key lost the salt column"
 
 
-def test_no_accidental_cartesian_or_row_python(spark):
-    """Suite-wide plan audit: no qid may grow a CartesianProduct, an
-    unexpected BroadcastNestedLoopJoin, or a row-at-a-time Python eval
-    outside the explicitly documented ones. Catches the silent plan
-    regressions correctness tests can't."""
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    bad = []
-    for qid, fn in sorted(QUERIES.items()):
-        plan = fn(spark, SF_DIR)._jdf.queryExecution().explainString(mode)
-        if "CartesianProduct" in plan:
-            bad.append(f"{qid}: CartesianProduct")
-        if "BroadcastNestedLoopJoin" in plan and qid not in _EXPECTED_BNLJ:
-            bad.append(f"{qid}: unexpected BNLJ")
-        if "BatchEvalPython" in plan and qid not in _EXPECTED_ROW_PYTHON:
-            bad.append(f"{qid}: row-at-a-time python")
-    assert not bad, bad
-
-
 def test_ann_queries_have_no_training_shuffles(spark):
     """r6: both registered ANN queries are probe-only plans — zero
     Exchange (the IVF quantizer trains on a bounded sample driver-side,
     so no Lloyd aggregation appears; LSH sketches are literal). The only
     ordering operator is the per-partition top-k heap."""
-    from aprsdb_spark.plans.inspect import count_exchanges
+    from aprsdb_spark.plans.inspect import exchange_nodes
 
     for qid in ("j_ann_ivf", "j_ann_lsh"):
         df = QUERIES[qid](spark, SF_DIR)
-        assert count_exchanges(df) == 0, f"{qid}: training/probe shuffle appeared"
+        assert exchange_nodes(df) == {"shuffle": 0, "broadcast": 0}, (
+            f"{qid}: training/probe shuffle appeared"
+        )
         p = df._jdf.queryExecution().executedPlan().toString()
         assert "TakeOrderedAndProject" in p, f"{qid}: top-k regressed to global sort"
 
@@ -890,16 +871,21 @@ def test_gini_never_materializes_ranks(spark):
     )
 
 
-# Shuffle budgets: ceilings measured when each plan was reviewed. A
+# Shuffle budgets: per qid, the shuffle + broadcast exchanges its cold
+# plan runs, counted as plan nodes by the one registry walk
+# (registry_plans) and checked by test_shuffle_budgets_hold. A
 # regression here means an operator silently grew an Exchange (lost a
 # broadcast, lost partial aggregation, lost bucket co-location) — the
-# class of performance bug correctness tests cannot see. Budgets are
-# UPPER bounds; lowering a plan should lower the budget too.
+# class of performance bug correctness tests cannot see. The counts
+# depend on the core count (at local[2] the spread() repartitions drop
+# out of some plans; local[8] plans as local[4]), so budgets are UPPER
+# bounds, measured at local[4]; lowering a plan should lower the budget
+# too.
 _SHUFFLE_BUDGETS = {
     "c_sql_q1": 2,          # agg + sort, no join shuffle
     "c_sql_q9": 6,          # 8-table shape: fact shuffles, dims broadcast
     "c_sql_q21": 6,         # EXISTS/NOT EXISTS share the l_orderkey exchange
-    "j_dedup_near": 6,      # signatures + band join + verify
+    "j_dedup_near": 5,      # signatures + band join + verify
     "j_sim_pairs_banded": 2,  # (band,key) bucketing is THE shuffle
     "j_pack_sequences": 4,  # range window + |ranges|-row rollup
     "j_token_budget": 7,    # two-level prefix sum, no SinglePartition corpus sort
@@ -908,7 +894,7 @@ _SHUFFLE_BUDGETS = {
     "j_topp_vocab": 5,
     "j_ts_changepoint": 3,  # ONE series-keyed exchange + mean/rollup
     "j_ts_trend": 3,
-    "j_source_overlap": 20,  # +1 spread() repartition, reprinted on both self-join sides
+    "j_source_overlap": 10,  # +1 spread() repartition
     "j_feature_hashing": 5,
     "j_span_corruption": 1,  # pure map + 1 spread() scan repartition (r17
                              #   single-row-group heal) — still zero data-
@@ -923,20 +909,14 @@ _SHUFFLE_BUDGETS = {
     "j_zipf_fit": 2,        # (source,token) agg + per-source rank window
     "j_pq_distortion": 2,   # Arrow-map partials + 8-row distinct-cid rollup
     "j_ks_lengths": 13,     # 2 corpus aggs; rest metadata-grid windows/broadcasts
-    "j_mutual_info": 11,    # ONE corpus (lang,source) agg; rest broadcast-scale
+    "j_mutual_info": 8,    # ONE corpus (lang,source) agg; rest broadcast-scale
     # --- r10 expansion: the r9 batch's remaining qids + everything the
-    # r10 window rescores. Ceilings measured on the cold sf0.01 plan at
-    # review time. NOTE on persisted sub-plans: a query that persists an
-    # internally-reused frame (kappa's confusion cells, dedup_cluster's
-    # per-round labels) reprints the cached child plan once PER
-    # InMemoryTableScan in toString, so its count is references x
-    # child-exchanges, not runtime shuffles — still a valid regression
-    # ceiling (a lost broadcast grows it), just not a shuffle tally.
+    # r10 window rescores.
     "j_ann_pq": 1,          # zero-shuffle ADC map; one top-k exchange
     "j_ann_pq_sink": 1,     # code-table TakeOrdered + ONE broadcast re-rank
     "j_ann_pq_recall": 3,   # exact leg + PQ leg + 1-row join
     "j_chunk_documents": 0,  # pure per-row array map — zero-shuffle contract
-    "j_cooccur_window": 6,  # +1 spread() repartition, reprint-inflated
+    "j_cooccur_window": 3,  # +1 spread() repartition
     "j_dedup_chunks": 4,
     "j_negative_sampling": 6,
     "c_sql_exec_immediate": 2,
@@ -951,8 +931,8 @@ _SHUFFLE_BUDGETS = {
     "j_head_template": 5,
     "j_lang_confusion": 16,  # the full lang-id scoring pipeline + cell agg
     "j_cluster_purity": 5,
-    "j_jaccard_threshold_curve": 9,  # +1 spread() repartition, reprinted on both self-join sides
-    "j_cohen_kappa": 53,    # 3 refs x persisted 16-exchange confusion child
+    "j_jaccard_threshold_curve": 4,  # +1 spread() repartition
+    "j_cohen_kappa": 21,    # the persisted confusion cells, run once
     "j_simpson_diversity": 2,
     "k_pandas_scalar": 0,
     "k_pandas_grouped_agg": 1,
@@ -971,7 +951,7 @@ _SHUFFLE_BUDGETS = {
     "j_text_stats": 1,
     "j_fingerprint": 1,
     "j_embed_centroid": 1,
-    "j_dedup_cluster": 60,  # fixed-round label propagation, persisted per round
+    "j_dedup_cluster": 18,  # fixed-round label propagation
     "j_split_train_val": 0,
     "j_quality_score": 0,
     "j_token_count": 0,
@@ -980,30 +960,20 @@ _SHUFFLE_BUDGETS = {
     "h_hash": 2,
     "h_geo_range": 0,
     "h_geo_pairs": 1,
-    # --- r10 additions (reprint caveat above applies to the persisted
-    # multi-reference plans: f1_macro = 2 refs x confusion child + 3 refs
-    # x scaled frame; clustering_coeff = 5 refs x persisted edge child;
-    # pagerank = 5 unrolled iterations over the persisted edge list)
-    "j_f1_macro": 107,
+    # --- r10 additions
+    "j_f1_macro": 21,
     "j_selective_accuracy": 17,  # scoring pipeline referenced exactly once
-    "j_hll_merge": 9,
+    "j_hll_merge": 8,
     "j_length_deciles": 5,
     "j_entropy_rate": 8,
     "j_fertility_audit": 1,     # narrow map + ONE lang-keyed agg
-    "j_clustering_coeff": 150,  # 76 standalone; suite-order sibling-cache
-                                #   reprints measured 131 after the r17 graph
-                                #   persists (the documented test-order
-                                #   inflation) — headroom, not plan growth
+    "j_clustering_coeff": 16,
     "j_recall_curve": 4,
     "j_burstiness": 2,
-    "j_chargram_confusion": 22,  # +2 spread() scan repartitions (single-row-group fixture heal), reprint-inflated
-    "j_bleu_precision": 26,  # +2 spread() repartitions, reprint-inflated
-    "j_pagerank": 25,   # r17 single-partition leaf fuse (measured 15 cold;
-    # was 135) — historical note below predates the fuse:
-    # whole graph family: assortativity/kcore/reciprocity caches built
-    # earlier in this loop alias _trade_edges subtrees (CacheManager
-    # canonical-plan matching) and each reprints its cached child here;
-    # standalone the plan counts 83
+    "j_chargram_confusion": 22,  # +2 spread() scan repartitions (single-row-group fixture heal)
+    "j_bleu_precision": 26,  # +2 spread() repartitions
+    "j_pagerank": 15,   # 14 shuffle + 1 broadcast: the r17 single-partition
+    #                     leaf fuse runs every round in-partition
     "k_apply_in_arrow": 1,
     "j_dup_rate": 2,        # digest agg + source rollup
     # --- r11 expansion: the full r11 REFRESH window (joins, agg
@@ -1039,22 +1009,20 @@ _SHUFFLE_BUDGETS = {
     "e_win_rank": 1,
     "e_win_sessionize": 1,
     "s_dedup_30s_batch": 1,
-    "j_semdedup": 15,       # bucket-keyed windows; persisted-child reprints
+    "j_semdedup": 7,       # bucket-keyed windows
     "j_pii_scrub": 0,       # pure per-row scrub — zero-shuffle contract
     "j_sample_stratified": 0,  # hash-deterministic per-row keep decision
-    "j_contamination": 7,  # +1 spread() repartition, reprint-inflated via cand/bench reuse
-    "j_dedup_containment": 10,
+    "j_contamination": 7,  # +1 spread() repartition
+    "j_dedup_containment": 6,
     "j_embed_quantize": 0,  # literal-grid per-row quantization map
-    # --- r11 additions. Measured on the cold sf0.01 plan at review
-    # time (the wasserstein/perplexity counts include broadcast-subtree
-    # reprints of shared aggs, per the persisted-plan caveat above).
+    # --- r11 additions
     "j_wasserstein_lengths": 13,
     "j_heaps_law": 6,
     "j_hill_tail": 2,
     "j_ngram_coverage": 6,  # TakeOrdered heaps, never a full vocab sort
     "j_perplexity_eval": 12,
     "j_ndcg": 7,
-    "j_ece_calibration": 3,
+    "j_ece_calibration": 2,
     "j_rank_tau": 8,
     "j_dedup_prefix": 2,    # digest agg + HAVING rollup
     "j_embed_norm_audit": 1,  # zero-shuffle assignment + ONE cluster agg
@@ -1069,9 +1037,7 @@ _SHUFFLE_BUDGETS = {
     "j_slice_deciles": 5,
     # --- r12 expansion: everything the r12 window rescores (the 10 r5
     # spillovers + the 20 oldest r6 qids) plus the four label/bucket
-    # all-pairs variants. Ceilings measured on the cold sf0.01 plan at
-    # review time (clearCache() first — see the note above on persisted
-    # sub-plans).
+    # all-pairs variants.
     "c_sql_q18": 5,         # top-100 big-customer 3-way: fact shuffles, HAVING agg
     "d_agg_salted": 2,      # salted partial + de-salt final
     "j_dedup_simhash": 1,   # sketch is a map; ONE digest-keyed agg
@@ -1082,19 +1048,18 @@ _SHUFFLE_BUDGETS = {
     "j_shuffle_shards": 1,  # ONE shard-keyed exchange IS the operator
     "j_reservoir_pergroup": 1,  # group-keyed draw-rank agg
     "j_dsir_weights": 6,
-    "j_winnow_pairs": 10,  # inherits the fingerprint spread() repartition, reprinted per join leg
+    "j_winnow_pairs": 7,  # inherits the fingerprint spread() repartition
     "j_dedup_lines": 6,
-    "j_dedup_substr": 12,  # +1 spread() repartition, reprinted per consumer leg
+    "j_dedup_substr": 5,  # +1 spread() repartition
     "j_chunk_overlap": 0,   # pure map over chunk grid — zero-shuffle
     "j_vocab_coverage": 4,
     "j_bloom_decontam": 8,
     "j_mix_temperature": 10,
     "j_bpe_train": 0,       # driver-literal trainer: scoring is a map
-    "j_bpe_encode": 6,      # r17: coalesced-vocab training (measured 4; was
-                            # 66 reprint-inflated cached-merge-table scans)
+    "j_bpe_encode": 2,      # r17: coalesced-vocab training
     "j_pipeline_release": 2,
     "j_inverted_index": 2,  # (term,doc) agg + per-term ranked lists
-    "j_repetition": 10,  # +1 spread() repartition, reprinted on both join legs
+    "j_repetition": 5,  # +1 spread() repartition
     "j_domain_mix": 4,
     "j_ngram_lm": 6,
     "j_lm_buckets": 14,     # LM fit + per-bucket rollup chain
@@ -1106,78 +1071,67 @@ _SHUFFLE_BUDGETS = {
     "j_dedup_embed": 4,     # GEMM pairs + directed union + keeper agg
     "j_sim_pairs_bucketed": 1,  # bucket equi-key IS the shuffle
     "j_dedup_embed_bucketed": 3,
-    # --- r12 additions. Ceilings measured on the cold sf0.01 plan;
-    # persisted metadata relations (drift/grid/ks/assort/split) reprint
-    # their cached child per InMemoryTableScan, so those ceilings are
-    # reprint-inflated (real exchange counts are a small fraction).
+    # --- r12 additions
     "j_dedup_keep_best": 1,     # ONE family-key shuffle serves 3 windows
     "j_wilson_ci": 1,
     "j_data_card": 5,
     "j_feature_corr": 1,
-    "j_drift_timeslices": 36,   # reprint-inflated (persisted count matrix)
+    "j_drift_timeslices": 15,
     "j_ngram_entropy_curve": 5,
-    "j_decile_grid_2d": 58,     # reprint-inflated (persisted hist + cell)
+    "j_decile_grid_2d": 17,
     "j_brier_score": 2,         # Arrow top-k partials + vote rollups
-    "j_bpe_compression": 6,     # r17: coalesced-vocab training (measured 4)
+    "j_bpe_compression": 2,     # r17: coalesced-vocab training
     "j_source_tfidf": 8,
-    "j_simhash_hamming": 6,
-    "j_assortativity": 20,      # reprint-inflated (persisted edge list)
+    "j_simhash_hamming": 4,
+    "j_assortativity": 10,
     "a_scan_xml": 1,
-    "j_split_balance": 23,      # reprint-inflated (shared drift rollup)
+    "j_split_balance": 15,
     "j_neyman_allocation": 4,
     "j_ks_embed": 3,            # the 3 BroadcastExchanges; the corpus agg sits
     #                             behind the checkpointed single-partition
-    #                             cell-count leaf, which prints no Exchange and
-    #                             no cached child (was 24, reprint-inflated by
-    #                             the persisted cell counts)
-    "j_minhash_est_error": 6,
-    "j_dedup_survivors": 14,  # +1 spread() repartition, reprint-inflated (persisted shingle frame)
-    "j_dup_transitivity": 21,   # reprint-inflated (persisted edges, 2 refs x wedge join)
+    #                             cell-count leaf
+    "j_minhash_est_error": 4,
+    "j_dedup_survivors": 13,  # +1 spread() repartition
+    "j_dup_transitivity": 12,
     "j_ts_autocorr": 1,         # ONE event_type exchange serves lead + moments
     "j_mannwhitney": 2,         # source filter agg + bounded rank window
-    "j_kcore_peel": 5,          # r17 single-partition leaf fuse (measured 3;
-                                #   was 12)
+    "j_kcore_peel": 3,          # r17 single-partition leaf fuse
     "j_ivf_balance": 6,         # literal-centroid map + 16-row occupancy agg
     "j_lsh_bucket_skew": 4,     # signature agg + (band,key) agg + 4-row rollup
-    "j_lsh_band_plan": 6,       # blocked quadratic + 2-row agg fan-out
+    "j_lsh_band_plan": 2,       # blocked quadratic + 2-row agg fan-out
     "j_pr_auc": 2,              # scored scan agg + grid-bounded window
     "j_shard_skew": 2,          # 64-row shard agg + 1-row fold
-    "j_cms_width_curve": 35,    # reprint-inflated (persisted tok + truth x3 widths) +1 spread() repartition
-    "j_hll_precision_curve": 18,  # reprint-inflated (persisted hash set x3 geometries)
-    "j_bloom_fpr_curve": 57,   # reprint-inflated (persisted bench/neg/positions x k refs); one size-exploded probe pass (r16)
-    "j_graph_reciprocity": 45,  # reprint-inflated (persisted capped edge
-                                #   list); 20 standalone, 34 in suite order
-                                #   after the r17 graph persists
-    "j_markov_stationary": 12,  # r17 single-partition leaf fuse: matrix and
-                                #   spine are checkpoint leaves (measured 10;
-                                #   was 50 reprint-inflated)
-    "j_dedup_yield_curve": 25,  # reprint-inflated (persisted 1-row drops agg x5 legs)
+    "j_cms_width_curve": 14,    # +1 spread() repartition
+    "j_hll_precision_curve": 12,
+    "j_bloom_fpr_curve": 19,   # one size-exploded probe pass (r16)
+    "j_graph_reciprocity": 9,
+    "j_markov_stationary": 10,  # r17 single-partition leaf fuse: matrix and
+                                #   spine are checkpoint leaves
+    "j_dedup_yield_curve": 5,
     "j_permutation_test": 6,    # two-source slice + replica explode agg
-    "j_topk_stability": 6,      # ONE (half,term) agg + bounded rank window
-    "j_ivf_nprobe_curve": 56,   # reprint-inflated (persisted cand/exact x4 depths)
+    "j_topk_stability": 4,      # ONE (half,term) agg + bounded rank window
+    "j_ivf_nprobe_curve": 12,
     "j_power_analysis": 1,      # ONE event_type FILTER-moment agg
-    "j_mcc_multiclass": 26,     # reprint-inflated (persisted confusion cells x5 re-aggs)
-    "j_horvitz_thompson": 9,    # reprint-inflated (persisted (p6,u6) relation x3)
-    "j_epoch_plan": 10,         # reprint-inflated (persisted lang agg x2 totals)
+    "j_mcc_multiclass": 14,
+    "j_horvitz_thompson": 7,
+    "j_epoch_plan": 6,
     # --- r14 additions
     "j_minmax_prune": 7,        # zone-map agg + threshold sweep on metadata
-    "j_join_card_est": 35,      # reprint-inflated (persisted |parts| histogram
-    # join referenced by rank window + summary + top-share aggs)
-    "j_ams_f2": 7,              # one histogram agg + 64-estimator fan-out
+    "j_join_card_est": 14,
+    "j_ams_f2": 6,              # one histogram agg + 64-estimator fan-out
     "j_encoding_audit": 5,      # one shard window pass + multi-distinct agg
     "j_kmv_distinct": 2,        # distinct collapse + bounded rank window
     "j_levene_test": 2,         # one event_type shuffle: window + moment agg
     "j_fdr_bh": 5,              # one moment agg + K-row p-value windows
-    "j_cramers_v": 15,          # reprint-inflated (persisted cells x margins/dims)
+    "j_cramers_v": 11,
     "j_spearman_corr": 7,       # one event_type shuffle reused by ranks+moments
-    "j_jackknife_variance": 14, # reprint-inflated (persisted shard partials x3)
-    "j_median_test": 16,        # histogram + median broadcast + cell agg reprints
-    "j_common_neighbors": 63,   # reprint-inflated (persisted und edge list x5
-    # refs, each embedding the _trade_edges flow agg); nation-bounded metadata
-    "j_good_turing": 9,         # reprint-inflated (persisted count-of-counts x3)
-    "j_burrows_delta": 35,      # reprint-inflated (persisted st + f6 spine refs)
+    "j_jackknife_variance": 10,
+    "j_median_test": 16,        # histogram + median broadcast + cell agg
+    "j_common_neighbors": 19,   # nation-bounded metadata
+    "j_good_turing": 5,
+    "j_burrows_delta": 12,
     "j_hubness": 14,            # batch-kNN fan-out + occurrence spine join
-    "j_dim_truncation_curve": 36,  # four unioned kNN legs + persisted exact set; spread() scan reprinted per leg
+    "j_dim_truncation_curve": 27,  # four unioned kNN legs + persisted exact set
     "j_lift_gains": 8,          # one scored agg + decile windows on metadata
     "j_youden_threshold": 5,    # one scored agg + heap TakeOrdered(1)
     "j_l_diversity": 2,         # one QI-cell hash agg (distinct expands)
@@ -1188,68 +1142,59 @@ _SHUFFLE_BUDGETS = {
     "j_kmv_jaccard": 5,         # panel scan + distinct + pair window +
                                 # single conditional agg (no mem fork)
     "j_text_integrity": 1,      # stateless detectors + ONE source agg
-    "j_bpe_roundtrip": 7,       # r17: coalesced-vocab training (measured 5;
-                                # was 67 reprint-inflated) + 1 distinct agg
+    "j_bpe_roundtrip": 3,       # r17: coalesced-vocab training + 1 distinct agg
     "j_anova_oneway": 2,        # one event_type moment agg + 5-row fold
     "j_kruskal_wallis": 2,      # one (lang,len) agg; midrank windows on it
     "j_fleiss_kappa": 1,        # stateless raters + single-row fold
-    "j_rbo_overlap": 5,         # two <=10-row index legs + 10-row grid
+    "j_rbo_overlap": 4,         # two <=10-row index legs + 10-row grid
     "j_rouge_recall": 20,       # j_bleu_precision's exact shuffle shape
     "j_t_closeness": 6,         # QI-cell agg + 20-row broadcast + rollup
-    "j_ts_crosscorr": 5,        # one day agg (persisted) + lag-grid joins
+    "j_ts_crosscorr": 4,        # one day agg (persisted) + lag-grid joins
     "j_mcnemar_test": 1,        # stateless raters + single-row fold
     "j_cochran_q": 1,           # stateless raters + single-row fold
     "j_benford_digits": 2,      # 9-digit agg + 9-row total window
     "j_mmr_diversity": 0,       # createDataFrame of the driver-collected
                                 # greedy picks (shortlist leg runs inside
                                 # the loop, persisted)
-    "j_js_divergence": 18,      # j_kl_sources' shape (persisted sc reprints)
-    "j_theil_index": 20,        # (source,len) histogram agg, persisted h
-                                # reprints across group/within/between legs
+    "j_js_divergence": 13,      # j_kl_sources' shape
+    "j_theil_index": 15,        # (source,len) histogram agg, persisted h
     "j_filter_bias": 2,         # one lang agg + 5-row total window
     "j_two_proportion_z": 1,    # stateless split + single-row fold
     "j_runs_test": 2,           # one day agg + |days|-row lag windows
-    # --- r16 additions (measured cold at sf0.01):
+    # --- r16 additions
     "a_scan_csv_permissive": 1,   # one PERMISSIVE scan + 4-class hash agg
     "a_scan_json_permissive": 1,  # one PERMISSIVE scan + 3-class hash agg
-    "j_label_propagation": 23,    # r17 single-partition leaf fuse: und is a
+    "j_label_propagation": 21,    # r17 single-partition leaf fuse: und is a
                                   # checkpoint leaf, rounds are in-partition
                                   # SHJs; the residual 25-row exchanges are
-                                  # the LeftOuter-chain stop point (measured
-                                  # 21; was 93 reprint-inflated)
-    "j_modularity": 3,            # r17 single-partition leaf fuse: the whole
+                                  # the LeftOuter-chain stop point
+    "j_modularity": 1,            # r17 single-partition leaf fuse: the whole
                                   # modularity fold plans with ZERO
-                                  # EnsureRequirements exchanges (measured 1;
-                                  # was 179 reprint-inflated)
-    "j_connected_components": 3,   # r17 single-partition leaf fuse: all 5
+                                  # EnsureRequirements exchanges
+    "j_connected_components": 1,   # r17 single-partition leaf fuse: all 5
                                    # HashMin rounds in-partition, ZERO ensure
-                                   # exchanges (measured 1; was 133)
-    "j_adamic_adar": 50,          # wedge join + degree broadcast
-    "j_harmonic_centrality": 90,  # 4 min-plus rounds over persisted und2;
-                                  #   sibling-cache reprint-inflated in suite
-                                  #   order (r17: measured 86 after the graph
-                                  #   family persists, 54 standalone)
-    "j_wilcoxon_signed": 6,       # one day agg (persisted) + |d|-histogram
+                                   # exchanges
+    "j_adamic_adar": 17,          # wedge join + degree broadcast
+    "j_harmonic_centrality": 21,  # 4 min-plus rounds over persisted und2
+    "j_wilcoxon_signed": 5,       # one day agg (persisted) + |d|-histogram
     "j_friedman_test": 1,         # stateless ranks + single-row fold
     "j_kendall_w": 21,            # 3 value-domain histograms + rank joins
-                                  # over the persisted score frame (reprints)
+                                  # over the persisted score frame
     "j_cohens_d": 1,              # the j_ab_ttest single conditional agg
     "j_log_loss": 5,              # _ece_votes Arrow partial-top pipeline
                                   # + label-count broadcast + rollup
-    "j_hellinger": 18,            # j_kl_sources' shape (persisted sc reprints)
+    "j_hellinger": 13,            # j_kl_sources' shape
     "j_readability": 1,           # stateless counts + one source agg
     "j_map_eval": 2,              # panel broadcast + qid windows + agg
     "j_cliffs_delta": 2,          # j_mannwhitney's value-domain chain
     "j_holm_bonferroni": 5,       # moment agg + K-row p-value windows
     "j_cochran_armitage": 4,      # min/max fold + 5-band agg (persisted v)
     "j_chao1": 2,                 # (source,token) agg + source rollup
-    "j_ljung_box": 9,             # one day agg (persisted) + 7-row lag grid
+    "j_ljung_box": 7,             # one day agg (persisted) + 7-row lag grid
     # --- r14 net completion: ceilings for every remaining registered
-    # qid, measured on the cold sf0.01 plan in the exact sorted-loop
-    # order this test runs (persisted-child reprints included, the
-    # same caveat as above) — the shuffle net now covers the FULL
-    # registry, so any operator that silently grows an Exchange
-    # goes red here, not in a 100x-scale incident.
+    # qid — the shuffle net now covers the FULL registry, so any
+    # operator that silently grows an Exchange goes red here, not in a
+    # 100x-scale incident.
     "a_pysrc_replay": 1,
     "a_scan_binary": 0,
     "a_scan_csv": 1,
@@ -1272,8 +1217,7 @@ _SHUFFLE_BUDGETS = {
     "c_join_shj": 3,
     "c_sql_pipe": 2,
     "c_sql_q11": 38,  # r17 EUROPE prefilter: the semi subquery subtree
-                      #   reprints under each natps consumer (measured 38;
-                      #   runtime reuses one exchange, rollup input 1/5)
+                      #   sits under each natps consumer (rollup input 1/5)
     "c_sql_q12": 3,
     "c_sql_q13": 4,
     "c_sql_q14": 2,
@@ -1281,10 +1225,9 @@ _SHUFFLE_BUDGETS = {
     "c_sql_q16": 5,
     "c_sql_q17": 4,
     "c_sql_q19": 2,
-    "c_sql_q2": 30,   # r17 prefilter reprints under both ps consumers
-                      #   (measured 30; the rollup input drops to ~1%)
+    "c_sql_q2": 30,   # r17 prefilter under both ps consumers (the rollup
+                      #   input drops to ~1%)
     "c_sql_q20": 8,   # r17 bolt-part semi prefilter under the rollup
-                      #   (measured 8)
     "c_sql_q22": 8,
     "c_sql_q4": 3,
     "c_sql_q6": 1,
@@ -1339,25 +1282,24 @@ _SHUFFLE_BUDGETS = {
     "h_variant": 1,
     "h_xml": 1,  # +1 spread() scan repartition (r17)
     "j_ab_ttest": 1,
-    "j_ann_recall": 14,
+    "j_ann_recall": 8,
     "j_attribution": 1,
     "j_bfs_distance": 1,
-    "j_bm25_topk": 10,
+    "j_bm25_topk": 8,
     "j_cdc_apply": 1,
     "j_chi2_independence": 11,
     "j_class_weights": 4,
     "j_clean_text": 0,
-    "j_cms_sketch": 9,  # +1 spread() repartition, reprinted per consumer leg
+    "j_cms_sketch": 4,  # +1 spread() repartition
     "j_compaction_plan": 2,
-    "j_dedup_edit": 9,
+    "j_dedup_edit": 1,
     "j_dedup_exact": 1,
-    "j_dedup_ngram": 3,  # +1 spread() repartition, reprinted on both self-join sides
+    "j_dedup_ngram": 2,  # +1 spread() repartition
     "j_dq_checks": 2,
     "j_entropy": 2,
     "j_feature_snapshot": 1,
     "j_gapfill": 3,
-    "j_graph_degree": 30,  # 13 standalone; 23 in suite order after the
-                           #   r17 graph persists (sibling-cache reprints)
+    "j_graph_degree": 13,
     "j_group_split": 1,
     "j_hard_negatives": 2,
     "j_histogram_equi": 3,
@@ -1365,7 +1307,7 @@ _SHUFFLE_BUDGETS = {
     "j_incremental_agg": 2,
     "j_interval_overlap": 7,
     "j_kfold_assign": 1,
-    "j_kl_sources": 18,
+    "j_kl_sources": 13,
     "j_lang_quality": 0,
     "j_lsh_recall_banded": 5,
     "j_markov_transitions": 6,
@@ -1374,12 +1316,12 @@ _SHUFFLE_BUDGETS = {
     "j_multimodal_frames": 0,
     "j_multimodal_resize": 0,
     "j_multimodal_sim": 1,
-    "j_ngram_novelty": 5,  # +1 spread() repartition, reprinted on both join legs
+    "j_ngram_novelty": 5,  # +1 spread() repartition
     "j_outlier_mad": 7,
     "j_pipeline_curate": 2,
-    "j_pmi_bigrams": 11,
+    "j_pmi_bigrams": 9,
     "j_profile_stats": 2,
-    "j_rank_fusion": 11,
+    "j_rank_fusion": 9,
     "j_rolling_corr": 2,
     "j_sample_weighted": 0,
     "j_scd2_history": 1,
@@ -1387,8 +1329,7 @@ _SHUFFLE_BUDGETS = {
     "j_sim_topk": 1,
     "j_skew_stats": 4,
     "j_snapshot_diff": 2,
-    "j_triangle_count": 125,  # 62 standalone; 107 in suite order after the
-                              #   r17 graph persists (sibling-cache reprints)
+    "j_triangle_count": 14,
     "j_ts_anomaly": 2,
     "j_ts_ewma": 1,
     "j_ts_ohlc": 1,
@@ -1402,99 +1343,147 @@ _SHUFFLE_BUDGETS = {
     "k_udtf_analyze": 0,
     "k_udtf_table": 1,
     # --- r16 continuation-session additions (wave 9+) ---
-    "j_mann_kendall": 11,  # ONE (type,day) corpus agg (persisted, reprinted
-    #                        per consumer) + broadcast pair self-join; sign /
+    "j_mann_kendall": 8,  # ONE (type,day) corpus agg (persisted) +
+    #                        broadcast pair self-join; sign /
     #                        tie / day-count rollups all on the <=|types|x
     #                        |days| relation
     "j_sen_slope": 4,      # same (type,day) agg + broadcast pair join + ONE
     #                        per-type rank window + 5-row median agg
-    "j_kaplan_meier": 6,   # ONE (user_id) corpus agg (persisted, reprinted) +
+    "j_kaplan_meier": 5,   # ONE (user_id) corpus agg (persisted) +
     #                        1-row fold broadcast + unpartitioned windows over
     #                        the <=|lifetimes| relation
-    "j_logrank_test": 13,  # the KM user agg (persisted, reprinted per fold) +
+    "j_logrank_test": 10,  # the KM user agg (persisted) +
     #                        two 1-row folds + preceding-frame windows + final
     #                        single-row agg, all on <=|lifetimes| rows
     "j_jarque_bera": 2,    # ONE (type,day) corpus agg + |types|-row moment
     #                        fold — no window, no join
-    "j_durbin_watson": 11, # ONE (type,day) corpus agg (persisted, reprinted)
+    "j_durbin_watson": 8, # ONE (type,day) corpus agg (persisted)
     #                        + |types|-row OLS folds broadcast back + ONE
     #                        per-type lag window over <=31 rows
     "j_cronbach_alpha": 3, # ONE (user_id) agg with 5 conditional sums + a
     #                        1-row fold + 5-row literal spine cross-join
     "j_partial_corr": 2,   # ONE (user_id) agg + single-row fold — no join
-    "j_cusum_drift": 5,    # ONE (type,day) agg (persisted, reprinted) +
+    "j_cusum_drift": 4,    # ONE (type,day) agg (persisted) +
     #                        |types|-row fold broadcast + per-type windows
-    "j_ewma_chart": 8,     # same agg + broadcast pair self-join (unrolled
+    "j_ewma_chart": 6,     # same agg + broadcast pair self-join (unrolled
     #                        recursion) + per-type row_number window
     "j_krippendorff_alpha": 1,  # one corpus projection folding to 1 row —
     #                             the j_fleiss_kappa plan verbatim
     "j_mantel_haenszel": 4,  # 1-row min-day fold broadcast + |weeks| agg +
     #                          single-row fold (the j_cochran_armitage class)
-    "j_seasonal_decompose": 12,  # (type,day) agg (persisted, reprinted) +
+    "j_seasonal_decompose": 9,  # (type,day) agg (persisted) +
     #                              OLS folds broadcast + 35-row dow agg +
     #                              per-type window
     "j_hurst_exponent": 7,  # (type,day) agg + 4-row literal spine cross +
     #                         per-(type,k,blk) windows + two metadata folds
-    "j_pacf": 15,          # ONE day agg (persisted, reprinted per lag leg) +
+    "j_pacf": 8,          # ONE day agg (persisted) +
     #                        3-row lag grid joins + 1-row pivot fold + unpivot
-    "j_breslow_day": 14,   # the j_mantel_haenszel stratum agg (persisted,
-    #                        reprinted) + pooled-OR fold + per-stratum pass +
+    "j_breslow_day": 8,   # the j_mantel_haenszel stratum agg (persisted)
+    #                        + pooled-OR fold + per-stratum pass +
     #                        single-row folds
 }
 
 
-def test_shuffle_budgets_hold(spark):
-    # Budgets are defined on the COLD plan: a frame persisted by an
-    # earlier test in this shared session embeds its InMemoryRelation's
-    # cached child plan (with its own Exchange) in the toString and
-    # inflates the count by test order (j_dedup_near: 6 -> 7).
-    spark.catalog.clearCache()
-    over = []
-    for qid, budget in sorted(_SHUFFLE_BUDGETS.items()):
-        p = QUERIES[qid](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-        n = p.count("Exchange")
-        if n > budget:
-            over.append(f"{qid}: {n} > {budget}")
-    assert not over, over
+def test_exchange_nodes_run_an_unloaded_cache_once(spark):
+    """A persisted aggregate joined to itself plans two scans of one
+    cache. Before the first action its aggregation shuffle runs once,
+    so the walk enters the cached plan once; after the write the
+    buffers are loaded and the shuffle runs no more."""
+    from pyspark.sql import functions as F
+
+    from aprsdb_spark.plans.inspect import exchange_nodes
+
+    agg = (
+        spark.range(1000)
+        .groupBy((F.col("id") % 10).alias("k"))
+        .agg(F.count("*").alias("n"))
+        .persist()
+    )
+    try:
+        df = agg.alias("a").join(F.broadcast(agg.alias("b")), "k")
+        assert exchange_nodes(df) == {"shuffle": 1, "broadcast": 1}
+        df.write.format("noop").mode("overwrite").save()
+        assert exchange_nodes(df) == {"shuffle": 0, "broadcast": 1}
+    finally:
+        agg.unpersist()
 
 
-def test_pagerank_standalone_plan_stays_tight(spark):
-    """The _SHUFFLE_BUDGETS ceiling for j_pagerank (135) is
-    reprint-inflated: in suite order, sibling graph qids planned earlier
-    in the budget loop persist _trade_edges subtrees, and the
-    CacheManager aliases each cached child into j_pagerank's printed
-    plan. That loosened ceiling would absorb a genuine ~60% regression
-    of the standalone plan — so the TIGHT bound is pinned here against
-    an empty CacheManager, independent of sibling caches: clearCache()
-    immediately before planning ONLY this qid prints the true 5-unrolled-
-    iteration shape (measured: exactly 83 Exchanges cold at r14; 15
-    after the r17 single-partition leaf fuse — the edge frame is a
-    checkpointed SinglePartition leaf, rounds are in-partition
-    ShuffledHashJoins with no broadcast build, exec 1.02 -> 0.72 s
-    warm at sf0.1; the residual 25-row exchanges are the documented
-    LeftOuter-chain stop point)."""
-    spark.catalog.clearCache()
-    p = (
-        QUERIES["j_pagerank"](spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    n = p.count("Exchange")
-    assert n <= 25, f"standalone j_pagerank plan grew: {n} Exchanges > 25"
-    # the r17 fuse contract: no per-round BroadcastExchange build — the
-    # only broadcast left is the final nation dim join
-    assert p.count("BroadcastExchange") <= 1, (
-        "per-iteration broadcast builds reappeared"
-    )
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """The suite-wide plan audit's one registry walk: every registered
+    qid, planned once from an empty CacheManager and read by one
+    structural walk (plans.inspect.plan_nodes). Maps qid -> node-class
+    counts; the tests below read it, none plans the registry again."""
+    from aprsdb_spark.plans.inspect import plan_nodes
+
+    nodes = {}
+    for qid in sorted(QUERIES):
+        spark.catalog.clearCache()
+        nodes[qid] = plan_nodes(QUERIES[qid](spark, SF_DIR))
+    return nodes
 
 
 def test_shuffle_budget_net_is_complete():
-    """r14 closed the net: EVERY registered qid carries an Exchange
-    ceiling (378/378; it was 213/358 at r13). Keep it closed — a new
-    qid without a measured budget is a scale regression waiting to
-    happen unobserved."""
-    missing = sorted(set(QUERIES) - set(_SHUFFLE_BUDGETS))
-    assert not missing, f"registered qids without an Exchange ceiling: {missing}"
-    stale = sorted(set(_SHUFFLE_BUDGETS) - set(QUERIES))
-    assert not stale, f"budgets for unregistered qids: {stale}"
+    """EVERY registered qid carries an Exchange ceiling, and no ceiling
+    outlives its qid — a new qid without a measured budget is a scale
+    regression waiting to happen unobserved."""
+    assert set(_SHUFFLE_BUDGETS) == set(QUERIES), (
+        "registered qids without an Exchange ceiling: "
+        f"{sorted(set(QUERIES) - set(_SHUFFLE_BUDGETS))}; ceilings for "
+        f"unregistered qids: {sorted(set(_SHUFFLE_BUDGETS) - set(QUERIES))}"
+    )
+
+
+def test_shuffle_budgets_hold(registry_plans):
+    """Per qid, shuffle + broadcast exchanges <= the qid's
+    _SHUFFLE_BUDGETS ceiling (a lost broadcast REPLACES it with a bigger
+    shuffle pair, still caught). Every qid over its ceiling is reported
+    in one message, with the counts to re-measure it from."""
+    over = []
+    for qid, nodes in registry_plans.items():
+        shuffle = nodes["ShuffleExchangeExec"]
+        broadcast = nodes["BroadcastExchangeExec"]
+        ceiling = _SHUFFLE_BUDGETS[qid]
+        if shuffle + broadcast > ceiling:
+            over.append(
+                f"{qid}: {shuffle} shuffle + {broadcast} broadcast > ceiling {ceiling}"
+            )
+    assert not over, "\n".join(over)
+
+
+def test_no_accidental_cartesian_or_row_python(registry_plans):
+    """No qid plans a CartesianProduct; a BroadcastNestedLoopJoin
+    appears exactly in the _EXPECTED_BNLJ qids and a row-at-a-time
+    Python eval exactly in the _EXPECTED_ROW_PYTHON ones, so both lists
+    shrink with the plans. Every violation is reported in one message."""
+    bad = []
+    for qid, nodes in registry_plans.items():
+        if nodes["CartesianProductExec"]:
+            bad.append(f"{qid}: CartesianProduct")
+        bnlj = nodes["BroadcastNestedLoopJoinExec"] > 0
+        if bnlj != (qid in _EXPECTED_BNLJ):
+            bad.append(f"{qid}: {'unexpected' if bnlj else 'allow-listed, no'} BNLJ")
+        row_python = any(cls.startswith("BatchEvalPython") for cls in nodes)
+        if row_python != (qid in _EXPECTED_ROW_PYTHON):
+            bad.append(
+                f"{qid}: {'unexpected' if row_python else 'allow-listed, no'} "
+                "row-at-a-time python"
+            )
+    assert not bad, "\n".join(bad)
+
+
+def test_pagerank_standalone_plan_stays_tight(spark):
+    """j_pagerank planned alone from an empty CacheManager stays within
+    its ceiling (14 shuffle + 1 broadcast since the single-partition
+    leaf fuse: the edge frame is a checkpointed SinglePartition leaf,
+    rounds are in-partition ShuffledHashJoins) and keeps the fuse
+    contract: no per-round broadcast build, the final nation dim join
+    is the only BroadcastExchange."""
+    from aprsdb_spark.plans.inspect import exchange_nodes
+
+    spark.catalog.clearCache()
+    n = exchange_nodes(QUERIES["j_pagerank"](spark, SF_DIR))
+    assert n["shuffle"] + n["broadcast"] <= _SHUFFLE_BUDGETS["j_pagerank"], (
+        f"standalone j_pagerank plan grew: {n}"
+    )
+    assert n["broadcast"] <= 1, f"per-iteration broadcast builds reappeared: {n}"

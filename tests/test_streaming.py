@@ -973,6 +973,7 @@ def test_ann_ingest_table_mode_is_exchange_free_on_the_store_side(spark, tmp_pat
         best_code_expr,
         pq_train_local,
     )
+    from aprsdb_spark.plans.inspect import exchange_nodes
 
     sf = "/root/testdata/sf0.001"
     emb = spark.read.parquet(sf + "/embeddings.parquet").select("vec_id", "embedding")
@@ -1018,7 +1019,7 @@ def test_ann_ingest_table_mode_is_exchange_free_on_the_store_side(spark, tmp_pat
     # subtree (everything from its FileScan up to the join) carries
     # none, because the bucketed scan already provides the hash
     # partitioning the SMJ requires on the store side.
-    assert p.count("Exchange") == 1, p[:3000]
+    assert exchange_nodes(probe) == {"shuffle": 1, "broadcast": 0}, p[:3000]
     store_scan_idx = p.index("FileScan parquet spark_catalog." + db)
     assert p.index("Exchange") < store_scan_idx, (
         "the single Exchange must belong to the probe side, above the "
