@@ -18,25 +18,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Final (post-AQE if executed) physical plan string."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    return [
-        line.strip()
-        for line in formatted_plan(df).splitlines()
-        if "PushedFilters" in line
-    ]
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    return [
-        line.strip() for line in formatted_plan(df).splitlines() if "ReadSchema" in line
-    ]
-
-
 def partition_filters(df: DataFrame) -> list[str]:
     return [
         line.strip()

@@ -1,7 +1,7 @@
 """Benchmark harness: runs every registered qid at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric", "value" (total sec), "unit", "queries": {qid:
-sec}, "sf"}.
+sec}, "sf", "cpus"}. It writes no file.
 
 Execution is forced through the noop sink — full plan runs (scan ->
 shuffle -> sink) with zero driver-collect cost, so timings measure the
@@ -17,112 +17,41 @@ import sys
 import time
 
 
-# Rounds eligible for the gate's min window: the newest 6 RECORDED
-# rounds overall (not the newest 3 datapoints a qid happens to have —
-# see the recency bound below). 6 = 2x the min window, so a qid missing
-# from a couple of truncated tails still gets its 3-point min.
-_RECENT_ROUNDS = 6
+def _reference(cpus: int) -> dict[str, float]:
+    """The gate's per-qid reference at `cpus` cores: the MIN of each
+    qid's non-negative datapoints over the newest 3 driver records
+    (BENCH_r*.json, ordered by their round "n") that carry "cpus" ==
+    `cpus` and a parsed "queries" dict. Timings scale with the core
+    count, so a record at another count never enters. The min keeps one
+    host-noisy round from loosening the gate (r14 recorded
+    j_entropy_rate at 1.26 s against a healthy 0.607 s), and a slowdown
+    that persists for 3 rounds becomes the new reference.
 
-
-def _reference() -> dict[str, float]:
-    """Per-qid datapoints merged across ALL recorded driver rounds
-    (BENCH_r{N}.json): each qid's reference is the MIN over its newest 3
-    rounds' datapoints WITHIN the newest _RECENT_ROUNDS recorded rounds
-    (recency-bounded per ADVICE r15; a qid absent from that window falls
-    back to its newest datapoint). Newest-wins (the pre-r15 rule) let one
-    host-noisy round LOOSEN the gate for a whole round: r14's capture
-    recorded j_entropy_rate at 1.26s (vs the healthy 0.607s) purely from
-    session pressure — the r14 verdict adjudicated it host drift — and
-    under newest-wins a real 2x regression on top of that would have
-    sailed through r15. Min-of-newest-3 keeps the healthy datapoint in
-    force while still tracking genuine persistent slowdowns (after 3
-    rounds at a new steady state the reference follows it). Driver bench
-    files store the output line either parsed (a "queries" dict) or as a
-    head-truncated "tail" string; every round so far is tail-truncated
-    (r4's tail carries only 81 of 114 qids), so reading only the newest
-    round silently dropped ~33 a/b/c/d qids from the gate — merging
-    keeps each qid's most recent surviving datapoints. Tail extraction
-    is regex over the surviving key/value pairs; the truncated first key
-    and the trailing "sf" are dropped explicitly, and error datapoints
-    (-1.0) never match the non-negative pattern."""
+    With no such record the reference is empty, and one stderr line
+    names the run's core count and the counts that have records."""
     here = os.path.dirname(os.path.abspath(__file__))
-    # BENCH_full_r{N}.json (complete per-qid data, written by main() since
-    # r6) is preferred over the driver's BENCH_r{N}.json whose captured
-    # "tail" is head-truncated. Same round number -> full file wins (it
-    # sorts after "BENCH_r" and the merge is newest-first). Rounds sort
-    # NUMERICALLY — lexicographic order breaks at r10.
-    #
-    # The CURRENT round's own full file is EXCLUDED: a full record written
-    # earlier in the same round would become the newest datapoint for its
-    # qids, so a slowdown introduced mid-round would gate against itself
-    # instead of against the previous round (this is how the r6 multimodal
-    # kernel rewrites sailed through rc=0 — justified there, but the
-    # mechanism would equally mask a genuine regression). Round number
-    # comes from the driver's PROGRESS.jsonl; if it's unreadable, exclude
-    # nothing rather than guess.
-    cur_rnd = -1
-    try:
-        with open(os.path.join(here, "PROGRESS.jsonl")) as f:
-            cur_rnd = max(json.loads(line)["round"] for line in f if line.strip())
-    except Exception:
-        pass
-    rounds = sorted(
-        (
-            f
-            for f in os.listdir(here)
-            if re.fullmatch(r"BENCH(_full)?_r\d+\.json", f)
-            and not (
-                "_full_" in f and int(re.search(r"\d+", f).group()) == cur_rnd
-            )
-        ),
-        key=lambda f: (int(re.search(r"\d+", f).group()), "_full_" in f),
-    )
-    # Per qid: newest-first list of per-round datapoints (one per round;
-    # within a round the full file wins over the truncated tail). The
-    # reference is min over each qid's newest 3 rounds.
-    per_qid: dict[str, list[float]] = {}
-    taken: set[tuple[str, int]] = set()
-    for fname in reversed(rounds):  # newest first; full before tail per round
-        rnd_no = int(re.search(r"\d+", fname).group())
-        try:
-            with open(os.path.join(here, fname)) as f:
-                data = json.load(f)
-        except Exception:
+    records = []
+    for fname in os.listdir(here):
+        if not (fname.startswith("BENCH_r") and fname.endswith(".json")):
             continue
-        parsed = data.get("parsed") or {}
-        queries = data.get("queries") or parsed.get("queries")
-        if isinstance(queries, dict) and queries:
-            extracted = {k: float(v) for k, v in queries.items() if float(v) >= 0}
-        else:
-            # Truncated first keys ("rs_wx" from "aprs_wx") and the
-            # trailing "sf" pair are inert: the gate intersects with the
-            # current run's timing keys, and no registered qid is a
-            # proper suffix of another (pinned by the bench-gate test).
-            extracted = {
-                m.group(1): float(m.group(2))
-                for m in re.finditer(r'"([a-z0-9_]+)": ([0-9.]+)', data.get("tail", ""))
-                if m.group(1) != "sf"
-            }
-        for k, v in extracted.items():
-            if (k, rnd_no) in taken:
-                continue
-            taken.add((k, rnd_no))
-            per_qid.setdefault(k, []).append((rnd_no, v))
-    # Recency bound (ADVICE r15): tail-truncated captures mean a qid can
-    # be absent from many recent rounds, so "newest 3 datapoints" alone
-    # silently reaches back to much older rounds — a stale fast value
-    # from a different host era would then permanently tighten the gate.
-    # Only datapoints from the newest _RECENT_ROUNDS recorded rounds are
-    # eligible for the min; a qid with none there falls back to its
-    # single newest datapoint (a gate that tracks where the qid actually
-    # is, not where it was eras ago).
-    recorded = sorted({r for vals in per_qid.values() for r, _ in vals})
-    recent = set(recorded[-_RECENT_ROUNDS:])
-    out: dict[str, float] = {}
-    for k, vals in per_qid.items():  # vals is newest-first
-        in_window = [v for r, v in vals if r in recent]
-        out[k] = min(in_window[:3]) if in_window else vals[0][1]
-    return out
+        with open(os.path.join(here, fname)) as f:
+            rec = json.load(f)
+        if (rec.get("parsed") or {}).get("queries"):
+            records.append(rec)
+    same = sorted((r for r in records if r.get("cpus") == cpus), key=lambda r: r["n"])
+    if not same:
+        have = sorted({r["cpus"] for r in records if "cpus" in r})
+        print(
+            f"BENCH-WARN gate skipped: no driver record at {cpus} cores "
+            f"(records exist at cores {have})",
+            file=sys.stderr,
+        )
+    ref: dict[str, float] = {}
+    for rec in same[-3:]:
+        for qid, t in rec["parsed"]["queries"].items():
+            if t >= 0:
+                ref[qid] = min(t, ref.get(qid, t))
+    return ref
 
 
 def _violates(t: float, ref_t: float) -> bool:
@@ -155,26 +84,26 @@ def _record(
     timings: dict[str, float],
     sf: float,
     n: int,
+    cpus: int,
     canary_start: float,
     canary_end: float,
 ) -> dict:
     """Assemble the one-line JSON record. Field ORDER is load-bearing
-    (r16 VERDICT item 2): the driver's capture keeps only a TAIL of this
+    (r16 VERDICT item 2): a capture that keeps only a TAIL of this
     ~12 KB line (BENCH_r15.json lost the head and with it "value" and
-    half the qids -> PERF n_common=0). Constant/recoverable metadata
-    goes FIRST (truncated away harmlessly), the sorted per-qid dict
-    next, and "value" LAST so a truncated capture always retains the
-    total and the trailing alphabetic suffix of qids; the gate's tail
-    regex (_reference) parses surviving pairs regardless. The record is
-    still exactly ONE JSON line on stdout with the same keys as every
-    prior round (plus the "warmups" regime note, ADVICE r16)."""
+    half the qids -> PERF n_common=0) must still hold the total. So
+    constant/recoverable metadata goes FIRST (truncated away
+    harmlessly), the sorted per-qid dict next, and "value" LAST. "cpus"
+    is the N of local[N], the core count the timings were taken at. The
+    record is exactly ONE JSON line on stdout."""
     total = round(sum(v for v in timings.values() if v >= 0), 3)
     return {
         "metric": "total_query_wall_sec",
         "unit": "sec",
         "sf": sf,
         "n": n,
-        "warmed": True,  # table + codegen + UDF-worker warmup in main()
+        "cpus": cpus,
+        "warmed": True,  # table + codegen + UDF-worker warmup in warm_up()
         # warmup regime: subsystems paid OUTSIDE the timed region;
         # numbers are comparable across harnesses that warm the same
         # set. None of these computes any qid's input.
@@ -193,7 +122,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     from aprsdb_spark.registry import QUERIES, load_all
-    from aprsdb_spark.session import get_spark
+    from aprsdb_spark.session import default_parallelism, get_spark
 
     load_all()
     # initial shuffle partitions sized to the local SF (AQE coalesces down,
@@ -201,51 +130,9 @@ def main() -> None:
     # sf0.1); a real cluster run sets 2-3x total executor cores instead.
     spark = get_spark("aprsdb_spark-bench", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = default_parallelism()  # the N of local[N]
 
-    # warmup: touch every table + codegen paths once
-    from aprsdb_spark.tables import load
-
-    t = load(spark, sf_dir)
-    t.lineitem.groupBy("l_returnflag").count().write.format("noop").mode("overwrite").save()
-    # warm the python UDF workers too — their ~3s daemon startup is a
-    # per-session fixed cost, not a property of whichever UDF query
-    # happens to run first
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    _ident = pandas_udf(lambda s: s, "long")
-    t.region.select(_ident(F.col("r_regionkey"))).write.format("noop").mode("overwrite").save()
-    # warm the Python DataSource machinery (driver-side schema worker +
-    # executor datasource workers) and the derby catalog the same way:
-    # both are per-session fixed costs (~6 s and ~0.5 s measured r16)
-    # that otherwise land on whichever qid touches the subsystem first
-    # (a_pysrc_replay, a_sink_bucketed). The warmup source is a 1-row
-    # dummy — none of any qid's input or work is precomputed.
-    try:
-        from pyspark.sql.datasource import DataSource, DataSourceReader
-
-        class _WarmReader(DataSourceReader):
-            def read(self, partition):
-                yield (0,)
-
-        class _WarmSource(DataSource):
-            @classmethod
-            def name(cls) -> str:
-                return "sg_bench_warmup_src"
-
-            def schema(self) -> str:
-                return "v int"
-
-            def reader(self, schema):
-                return _WarmReader()
-
-        spark.dataSource.register(_WarmSource)
-        spark.read.format("sg_bench_warmup_src").load().write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception:
-        pass  # optional warm: absence must not fail the bench
-    spark.catalog.listDatabases()
+    t = warm_up(spark, sf_dir)
 
     # n runs per qid, min reported: r2's gate datapoints were warm n=2
     # while r3/r4 ran cold n=1, and the resulting 1.2-3x "regressions"
@@ -302,12 +189,13 @@ def main() -> None:
         # warm regime being measured.
         spark.catalog.clearCache()
 
-    # Regression gate (BASELINE.md): any qid > 2x its newest recorded
-    # driver datapoint flags the bench. The +0.5s floor absorbs run
-    # noise on sub-second qids; disable with SPARK_GRAFT_BENCH_GATE=off.
-    # Gate only at the recorded scale factor — other SFs have no
-    # reference datapoints. Runs BEFORE the JSON line so retried minima
-    # land in the recorded datapoints.
+    # Regression gate (BASELINE.md): any qid > 2x its reference, the min
+    # over the driver's newest 3 records at this run's core count
+    # (_reference), flags the bench. The +0.5s floor absorbs run noise
+    # on sub-second qids; disable with SPARK_GRAFT_BENCH_GATE=off. Gate
+    # only at the recorded scale factor — other SFs have no reference
+    # datapoints. Runs BEFORE the JSON line so retried minima land in
+    # the recorded datapoints.
     #
     # Exit policy (r16 VERDICT item 1): the gate is a BUILDER aid — a
     # >2x threshold over sub-3-second qids on a cold JVM fires
@@ -320,7 +208,7 @@ def main() -> None:
     _warn_unknown_gate_mode(gate_mode)
     slow: list[tuple[str, float, float]] = []
     if sf == 0.1 and gate_mode != "off":
-        ref = _reference()
+        ref = _reference(cpus)
 
         def violates(qid: str, t: float) -> bool:
             return qid in ref and _violates(t, ref[qid])
@@ -346,7 +234,7 @@ def main() -> None:
             if violates(qid, t):
                 slow.append((qid, t, ref[qid]))
 
-    record = _record(timings, sf, n, canary_start, _canary())
+    record = _record(timings, sf, n, cpus, canary_start, _canary())
 
     # Flags go out BEFORE the JSON line so the record is the LAST thing
     # on the combined stream — a tail-truncating capture keeps it whole.
@@ -355,28 +243,62 @@ def main() -> None:
     sys.stderr.flush()
     print(json.dumps(record))
 
-    # Persist the COMPLETE per-qid datapoints alongside the stdout line:
-    # the driver's captured BENCH_r{N}.json head-truncates its "tail"
-    # (r5 lost 38 of 122 qids), so future gates read these full files
-    # first (committed per round — see _reference). Round number comes
-    # from the driver's progress log; skip the file rather than guess
-    # when it's absent. Only at the gated SF — other SFs would pollute
-    # the reference with incomparable datapoints.
-    if sf == 0.1:
-        try:
-            here = os.path.dirname(os.path.abspath(__file__))
-            with open(os.path.join(here, "PROGRESS.jsonl")) as f:
-                rnd = max(
-                    json.loads(line)["round"] for line in f if line.strip()
-                )
-            with open(os.path.join(here, f"BENCH_full_r{rnd}.json"), "w") as f:
-                json.dump(record, f, indent=1)
-        except Exception as e:
-            print(f"BENCH-WARN full-record write skipped: {e}", file=sys.stderr)
-
     rc = _gate_rc(len(slow), gate_mode)
     if rc:
         sys.exit(rc)
+
+
+def warm_up(spark, sf_dir: str):
+    """Pay the session's per-subsystem fixed costs outside any timed
+    region, and return the table handles (`tables.load`): every table
+    and the codegen paths, the Python UDF daemon, the Python DataSource
+    workers and the derby catalog (the "warmups" of `_record`). None of
+    them computes any qid's input. `scripts/profile_qids.py` calls it
+    too, so its profiles share the bench's warm regime."""
+    from aprsdb_spark.tables import load
+
+    t = load(spark, sf_dir)
+    t.lineitem.groupBy("l_returnflag").count().write.format("noop").mode("overwrite").save()
+    # warm the python UDF workers too — their ~3s daemon startup is a
+    # per-session fixed cost, not a property of whichever UDF query
+    # happens to run first
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    _ident = pandas_udf(lambda s: s, "long")
+    t.region.select(_ident(F.col("r_regionkey"))).write.format("noop").mode("overwrite").save()
+    # warm the Python DataSource machinery (driver-side schema worker +
+    # executor datasource workers) and the derby catalog the same way:
+    # both are per-session fixed costs (~6 s and ~0.5 s measured r16)
+    # that otherwise land on whichever qid touches the subsystem first
+    # (a_pysrc_replay, a_sink_bucketed). The warmup source is a 1-row
+    # dummy — none of any qid's input or work is precomputed.
+    try:
+        from pyspark.sql.datasource import DataSource, DataSourceReader
+
+        class _WarmReader(DataSourceReader):
+            def read(self, partition):
+                yield (0,)
+
+        class _WarmSource(DataSource):
+            @classmethod
+            def name(cls) -> str:
+                return "sg_bench_warmup_src"
+
+            def schema(self) -> str:
+                return "v int"
+
+            def reader(self, schema):
+                return _WarmReader()
+
+        spark.dataSource.register(_WarmSource)
+        spark.read.format("sg_bench_warmup_src").load().write.format("noop").mode(
+            "overwrite"
+        ).save()
+    except Exception:
+        pass  # optional warm: absence must not fail the bench
+    spark.catalog.listDatabases()
+    return t
 
 
 if __name__ == "__main__":

@@ -21,6 +21,8 @@ import sys
 import time
 import urllib.request
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 
 def _rest_counts(base: str, app_id: str) -> tuple[int, int, int]:
     try:
@@ -41,46 +43,13 @@ def main() -> None:
 
     from aprsdb_spark.registry import QUERIES, load_all
     from aprsdb_spark.session import get_spark
+    from bench import warm_up
 
     load_all()
     spark = get_spark("aprsdb_spark-profile", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    from aprsdb_spark.tables import load
-
-    t = load(spark, sf_dir)
-    t.lineitem.groupBy("l_returnflag").count().write.format("noop").mode("overwrite").save()
-    _ident = pandas_udf(lambda s: s, "long")
-    t.region.select(_ident(F.col("r_regionkey"))).write.format("noop").mode("overwrite").save()
-    # mirror bench.py's subsystem warmups so profiles stay comparable
-    try:
-        from pyspark.sql.datasource import DataSource, DataSourceReader
-
-        class _WarmReader(DataSourceReader):
-            def read(self, partition):
-                yield (0,)
-
-        class _WarmSource(DataSource):
-            @classmethod
-            def name(cls) -> str:
-                return "sg_bench_warmup_src"
-
-            def schema(self) -> str:
-                return "v int"
-
-            def reader(self, schema):
-                return _WarmReader()
-
-        spark.dataSource.register(_WarmSource)
-        spark.read.format("sg_bench_warmup_src").load().write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception:
-        pass
-    spark.catalog.listDatabases()
+    warm_up(spark, sf_dir)  # the bench's warm regime, so profiles stay comparable
 
     base = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId

@@ -1,7 +1,7 @@
 """Tri-scale oracle verification for named qids (optimization-round
 safety harness): runs each qid on Spark and its DuckDB oracle twin at
-sf0.001 / sf0.01 / sf0.1 and compares count + schema + canonical values,
-exactly like tests/conftest.compare_query. Usage:
+sf0.001 / sf0.01 / sf0.1 and compares count + schema + canonical values
+with tests/conftest.compare_query, the oracle mirror's comparer. Usage:
 
     python scripts/verify_qids.py qid1 qid2 ...
     python scripts/verify_qids.py --sf 0.01 qid1   # single scale
@@ -13,7 +13,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 
 
 def main() -> None:
@@ -28,7 +27,7 @@ def main() -> None:
 
     from aprsdb_spark.registry import ORACLE, QUERIES, load_all
     from aprsdb_spark.session import get_spark
-    from tests.conftest import canonical_rows
+    from tests.conftest import TABLES, compare_query
 
     load_all()
     unknown = [q for q in qids if q not in QUERIES]
@@ -42,39 +41,18 @@ def main() -> None:
     for sf in sfs:
         sf_dir = f"/root/testdata/sf{sf}"
         duck = duckdb.connect()
-        for t in (
-            "region nation customer supplier part orders lineitem events "
-            "documents embeddings"
-        ).split():
+        for t in TABLES:
             duck.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
             )
         for qid in qids:
             try:
-                sdf = QUERIES[qid](spark, sf_dir)
-                s_cols = sdf.columns
-                s_rows = [tuple(r) for r in sdf.collect()]
                 if qid not in ORACLE:
-                    print(f"sf{sf} {qid}: rows-only, {len(s_rows)} rows OK")
+                    n = len(QUERIES[qid](spark, sf_dir).collect())
+                    print(f"sf{sf} {qid}: rows-only, {n} rows OK")
                     continue
-                d_rel = duck.execute(ORACLE[qid])
-                d_cols = [c[0] for c in d_rel.description]
-                d_rows = d_rel.fetchall()
-                assert sorted(s_cols) == sorted(d_cols), (
-                    f"cols spark={sorted(s_cols)} duck={sorted(d_cols)}"
-                )
-                assert len(s_rows) == len(d_rows), (
-                    f"rows spark={len(s_rows)} duck={len(d_rows)}"
-                )
-                _, s_canon = canonical_rows(s_cols, s_rows)
-                _, d_canon = canonical_rows(d_cols, d_rows)
-                bad = [
-                    (i, a, b)
-                    for i, (a, b) in enumerate(zip(s_canon, d_canon))
-                    if a != b
-                ]
-                assert not bad, f"{len(bad)} mismatches; first: {bad[:2]}"
-                print(f"sf{sf} {qid}: OK ({len(s_rows)} rows)")
+                n = compare_query(spark, duck, QUERIES[qid], ORACLE[qid], sf_dir=sf_dir)
+                print(f"sf{sf} {qid}: OK ({n} rows)")
             except Exception as e:
                 failures += 1
                 print(f"sf{sf} {qid}: FAIL {e}")

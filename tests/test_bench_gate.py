@@ -1,11 +1,8 @@
-"""The bench regression gate must merge per-qid datapoints across ALL
-recorded driver rounds (per-qid MIN over the newest 3 rounds, so one
-host-noisy round can neither loosen nor permanently tighten the gate)
-and survive both on-disk formats (parsed "queries" dict vs
-head-truncated "tail" string).
-Every recorded round so far is tail-truncated — r4's tail carries only
-81 of 114 qids — so a newest-round-only reference silently dropped the
-a/b/c/d block from the gate (the r4 verdict's one red test)."""
+"""The bench regression gate reads its reference from the driver's own
+records (BENCH_r*.json with a parsed "queries" dict), at the run's core
+count only: per qid, the MIN over the newest 3 such records, so one
+host-noisy round can neither loosen nor permanently tighten the gate,
+and a record taken at another core count never enters."""
 
 from __future__ import annotations
 
@@ -23,34 +20,44 @@ def _bench_module():
     return mod
 
 
+def _write_record(path, rnd: int, cpus: int, queries: dict) -> None:
+    """A driver record as the driver writes it: round and core count at
+    the top, the bench's output line parsed under "parsed"."""
+    path.write_text(
+        json.dumps({"n": rnd, "cpus": cpus, "sf": 0.1, "parsed": {"n": 2, "queries": queries}})
+    )
+
+
 def test_reference_merges_all_recorded_rounds():
-    ref = _bench_module()._reference()
-    assert len(ref) > 100, "gate reference empty or truncated — gate silently off"
-    assert all(v >= 0 for v in ref.values())
-    # the head-of-alphabet block lives only in older rounds' tails —
-    # present iff the merge actually spans rounds
-    assert "a_scan_parquet" in ref or "b_filter_pred" in ref
-    # and the newest round's datapoints must win for qids it carries
-    assert "j_dedup_near" in ref
+    """The committed driver records cover every registered qid at each
+    core count they were taken at (32 and 8)."""
+    from aprsdb_spark.registry import QUERIES, load_all
+
+    load_all()
+    b = _bench_module()
+    for cpus in (32, 8):
+        ref = b._reference(cpus)
+        assert set(ref) == set(QUERIES), (cpus, sorted(set(QUERIES) ^ set(ref))[:10])
+        assert all(v >= 0 for v in ref.values())
 
 
 def test_reference_is_min_over_newest_three_rounds(tmp_path, monkeypatch):
+    """Per qid, the min over the newest 3 records (by round "n", not by
+    file name): the r96 fast datapoint has aged out. Error datapoints
+    (-1) are dropped, and records without a parsed dict are skipped."""
     b = _bench_module()
-    # r98 (tail format) has old_qid + shared_qid; r99 (parsed) has
-    # new_qid + a newer shared_qid. Merge keeps all three; shared_qid's
-    # reference is min over its newest rounds (2.0 < 5.0); errors (-1)
-    # and the "sf" pair are dropped.
-    (tmp_path / "BENCH_r98.json").write_text(
-        json.dumps({"tail": '"old_qid": 9.9, "shared_qid": 5.0, "sf": 0.1'})
-    )
+    for rnd, q, extra in [
+        (96, 0.1, {}),
+        (97, 2.0, {"new_qid": 1.5}),
+        (98, 5.0, {"skipped": -1.0}),
+        (100, 3.0, {}),
+    ]:
+        _write_record(tmp_path / f"BENCH_r{rnd}.json", rnd, 32, {"q": q, **extra})
     (tmp_path / "BENCH_r99.json").write_text(
-        json.dumps(
-            {"n": 1, "parsed": {"queries": {"new_qid": 1.5, "shared_qid": 2.0, "skipped": -1.0}}}
-        )
+        json.dumps({"n": 99, "cpus": 32, "tail": '"q": 0.01', "parsed": None})
     )
     monkeypatch.setattr(b.os.path, "dirname", lambda _: str(tmp_path))
-    ref = b._reference()
-    assert ref == {"old_qid": 9.9, "shared_qid": 2.0, "new_qid": 1.5}, ref
+    assert b._reference(32) == {"q": 2.0, "new_qid": 1.5}
 
 
 def test_noisy_newest_round_cannot_loosen_the_gate(tmp_path, monkeypatch):
@@ -67,78 +74,41 @@ def test_noisy_newest_round_cannot_loosen_the_gate(tmp_path, monkeypatch):
         (98, 0.61, 4.2),
         (99, 1.26, 4.0),  # newest round: q inflated 2x by host noise
     ]:
-        (tmp_path / f"BENCH_r{rnd}.json").write_text(
-            json.dumps({"queries": {"q": q_val, "steady": steady_val}})
+        _write_record(
+            tmp_path / f"BENCH_r{rnd}.json", rnd, 32, {"q": q_val, "steady": steady_val}
         )
     monkeypatch.setattr(b.os.path, "dirname", lambda _: str(tmp_path))
-    ref = b._reference()
+    ref = b._reference(32)
     # q: min(1.26, 0.61, 0.60) over newest 3 — the healthy 0.60 holds
     assert ref["q"] == 0.60, ref
     # steady: the r96 fast datapoint aged out of the 3-round window
     assert ref["steady"] == 4.0, ref
 
 
-def test_full_file_wins_over_tail_within_a_round(tmp_path, monkeypatch):
-    """One datapoint per (qid, round): when both the driver's truncated
-    tail capture and the committed full record exist for the same round,
-    the full file's value is the round's datapoint — the tail must not
-    contribute a second value to the min window."""
+def test_record_at_another_core_count_never_enters(tmp_path, monkeypatch):
+    """The same round recorded at 8 and at 32 cores: each core count's
+    reference is its own record, however much faster the other is."""
     b = _bench_module()
-    (tmp_path / "BENCH_r99.json").write_text(
-        json.dumps({"tail": '"q": 0.1, "sf": 0.1'})  # bogus-fast tail
-    )
-    (tmp_path / "BENCH_full_r99.json").write_text(
-        json.dumps({"queries": {"q": 1.0}})
-    )
+    _write_record(tmp_path / "BENCH_r99.json", 99, 32, {"q": 1.0})
+    _write_record(tmp_path / "BENCH_r99_c8.json", 99, 8, {"q": 3.0})
     monkeypatch.setattr(b.os.path, "dirname", lambda _: str(tmp_path))
-    assert b._reference() == {"q": 1.0}
+    assert b._reference(32) == {"q": 1.0}
+    assert b._reference(8) == {"q": 3.0}
 
 
-def test_reference_ignores_current_rounds_own_full_file(tmp_path, monkeypatch):
-    """A BENCH_full_r{N}.json written EARLIER IN THE SAME ROUND must not
-    become the gate reference for round N's later bench runs — otherwise
-    a slowdown introduced mid-round gates against itself instead of
-    against the previous round (the r6 multimodal mechanism). The round
-    number comes from PROGRESS.jsonl; prior rounds' full files still
-    participate."""
+def test_missing_reference_prints_one_line_and_skips(tmp_path, monkeypatch, capsys):
+    """With no record at the run's core count the reference is empty, so
+    the gate flags nothing, and one stderr line names the run's core
+    count and the counts that do have records. Reading the reference
+    needs no Spark session."""
     b = _bench_module()
-    (tmp_path / "PROGRESS.jsonl").write_text(
-        json.dumps({"round": 98}) + "\n" + json.dumps({"round": 99}) + "\n"
-    )
-    # prior round: slow datapoint (the legitimate reference)
-    (tmp_path / "BENCH_full_r98.json").write_text(
-        json.dumps({"queries": {"q": 1.0}})
-    )
-    # same-round full file carrying a regressed value — must be ignored
-    (tmp_path / "BENCH_full_r99.json").write_text(
-        json.dumps({"queries": {"q": 9.0, "only_in_cur": 3.0}})
-    )
-    # the driver's captured BENCH_r99.json is written AFTER the round's
-    # bench runs, so it never self-references; if present it still counts
-    (tmp_path / "BENCH_r99.json").write_text(
-        json.dumps({"queries": {"driver_q": 2.0}})
-    )
+    _write_record(tmp_path / "BENCH_r99.json", 99, 32, {"q": 1.0})
+    _write_record(tmp_path / "BENCH_r99_c8.json", 99, 8, {"q": 3.0})
     monkeypatch.setattr(b.os.path, "dirname", lambda _: str(tmp_path))
-    ref = b._reference()
-    assert ref == {"q": 1.0, "driver_q": 2.0}, ref
-
-
-def test_no_registered_qid_is_a_proper_suffix_of_another():
-    """Tail extraction can yield truncated keys ("rs_wx" from "aprs_wx").
-    Those are inert only while no registered qid is a proper suffix of
-    another — pin that invariant so a future qid name can't silently
-    poison the gate reference."""
-    from aprsdb_spark.registry import QUERIES, load_all
-
-    load_all()
-    qids = sorted(QUERIES)
-    clashes = [
-        (a, b)
-        for a in qids
-        for b in qids
-        if a != b and b.endswith(a)
-    ]
-    assert not clashes, f"qid suffix collisions would poison tail parsing: {clashes}"
+    assert b._reference(4) == {}
+    err = capsys.readouterr().err
+    assert err.count("\n") == 1, err
+    assert "4 cores" in err and "[8, 32]" in err, err
 
 
 def test_gate_detects_synthetic_2x_slowdown_but_default_rc_is_zero():
@@ -187,19 +157,20 @@ def test_legacy_or_unknown_gate_mode_warns_on_stderr(capsys):
 
 def test_record_field_order_survives_tail_truncation():
     """r16 VERDICT item 2: the one-line JSON must keep its decisive
-    fields at the END so the driver's tail-truncating capture retains
-    them — "value" is the final key, "queries" immediately before it,
-    and a simulated truncated tail still yields the total plus the
-    trailing qids via the same regex _reference uses on tails."""
+    fields at the END so a tail-truncating capture retains them —
+    "value" is the final key, "queries" immediately before it, the core
+    count sits among the metadata at the head, and a simulated truncated
+    tail still yields the total plus the trailing qids."""
     import re
 
     b = _bench_module()
     timings = {f"q_{c}": 1.0 for c in "abcdefghij"}
-    rec = b._record(timings, 0.1, 2, 0.05, 0.05)
+    rec = b._record(timings, 0.1, 2, 4, 0.05, 0.05)
     line = json.dumps(rec)
     assert list(rec)[-2:] == ["queries", "value"]
     assert rec["value"] == 10.0
-    # simulate the driver keeping only the last ~90 bytes of the line
+    assert rec["cpus"] == 4 and list(rec).index("cpus") < list(rec).index("queries")
+    # simulate a capture keeping only the last ~90 bytes of the line
     tail = line[-90:]
     pairs = {
         m.group(1): float(m.group(2))
@@ -207,27 +178,3 @@ def test_record_field_order_survives_tail_truncation():
     }
     assert pairs.get("value") == 10.0, (tail, pairs)
     assert "q_j" in pairs, (tail, pairs)  # trailing qids survive
-
-
-def test_stale_fast_datapoint_outside_recency_window_cannot_tighten(
-    tmp_path, monkeypatch
-):
-    """ADVICE r15: a qid absent from recent rounds (tail truncation)
-    must not be gated by a stale fast datapoint from a different host
-    era. Only the newest _RECENT_ROUNDS recorded rounds feed the min;
-    a qid with no datapoint there falls back to its single newest one."""
-    b = _bench_module()
-    # 8 recorded rounds; "ghost" was benched only in the two OLDEST
-    # (one suspiciously fast), "live" appears everywhere.
-    for rnd in range(90, 98):
-        q = {"live": 1.0 + (rnd % 3) * 0.1}
-        if rnd in (90, 91):
-            q["ghost"] = 0.2 if rnd == 90 else 3.0
-        (tmp_path / f"BENCH_r{rnd}.json").write_text(json.dumps({"queries": q}))
-    monkeypatch.setattr(b.os.path, "dirname", lambda _: str(tmp_path))
-    ref = b._reference()
-    # recency window = r92..r97; ghost has nothing there -> newest
-    # datapoint (r91's 3.0), NOT the stale-fast 0.2 min
-    assert ref["ghost"] == 3.0, ref
-    # live: min over its newest 3 in-window datapoints, unchanged rule
-    assert ref["live"] == min(1.0 + (r % 3) * 0.1 for r in (95, 96, 97)), ref

@@ -53,9 +53,11 @@ def test_scan_pruned_pushes_filter_and_prunes_columns(spark):
 
 
 def test_star_dims_are_broadcast(spark):
-    p = _plan(spark, "c_join_bcast")
-    assert p.count("BroadcastHashJoin") >= 2, "nation/region must broadcast, not shuffle"
-    assert "SortMergeJoin" not in p
+    from aprsdb_spark.plans.inspect import plan_nodes
+
+    nodes = plan_nodes(QUERIES["c_join_bcast"](spark, SF_DIR))
+    assert nodes["BroadcastHashJoinExec"] >= 2, "nation/region must broadcast, not shuffle"
+    assert nodes["SortMergeJoinExec"] == 0
 
 
 def test_topk_avoids_global_sort(spark):
@@ -71,8 +73,9 @@ def test_smj_hint_respected_for_large_join(spark):
 def test_agg_is_two_phase(spark):
     """Partial (map-side) + final hash agg: the shuffle carries one row
     per group per partition, not per input row."""
-    p = _plan(spark, "d_agg_basic")
-    assert p.count("HashAggregate") >= 2
+    from aprsdb_spark.plans.inspect import plan_nodes
+
+    assert plan_nodes(QUERIES["d_agg_basic"](spark, SF_DIR))["HashAggregateExec"] >= 2
 
 
 def test_semi_anti_join_shapes(spark):
