@@ -62,8 +62,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for every hash-checkable qid, in
-    the same head order as queries()."""
+    """DuckDB-runnable ANSI SQL twin for every qid, in the same order
+    as queries()."""
     from aprsdb_spark.registry import ORACLE, driver_ordered, load_all
 
     load_all()

@@ -760,11 +760,10 @@ def _centroid_values_sql() -> str:
     bounded sample — see kmeans_train_local) on the canonical
     correctness SF and render the centroids as a DuckDB VALUES list —
     the shared literal-model half of the IVF oracles. A training
-    failure (missing testdata, numpy change) PROPAGATES: silently
-    downgrading to oracle=None would shrink test_oracle's
-    parametrization and flip j_ann_ivf/j_ann_recall to rows-only
-    without any test going red (the r8 verdict's finding; the
-    queries==oracles invariant test now pins the 0-rows-only claim)."""
+    failure (missing testdata, numpy change) PROPAGATES: a fallback
+    without an oracle once turned j_ann_ivf/j_ann_recall rows-only
+    without any test going red (the r8 verdict's finding); the registry
+    now requires an oracle for every qid."""
     import os
 
     from ..operators.similarity import kmeans_train_local
@@ -1686,15 +1685,19 @@ def j_sim_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     score is band-invariant (same two vectors, same fold); the final
     pair-dedup agg shuffles only survivors.
 
-    Hot buckets: SPARK_GRAFT_BANDED_SPLITS=S salts every (band, key)
-    bucket into S(S+1)/2 co-grouped split-pair tasks (bit-identical
-    output — the whole registered plan is equality-tested at S=3 in
-    tests/test_scale_paths.py). When to raise S: run j_skew_stats'
-    top-bucket diagnostic over the exploded tag table; SCALE.md §4n
-    gives the sizing rule (S ≈ ceil(m_max / m_target) for the largest
-    observed bucket m_max)."""
-    import os
+    Hot buckets: the split count S is a code constant, 1 here; the
+    builder _sim_pairs_banded salts every (band, key) bucket into
+    S(S+1)/2 co-grouped split-pair tasks (bit-identical output — the
+    whole plan is equality-tested at S=3 in tests/test_scale_paths.py).
+    When to raise S: run j_skew_stats' top-bucket diagnostic over the
+    exploded tag table; SCALE.md §4n gives the sizing rule
+    (S ≈ ceil(m_max / m_target) for the largest observed bucket m_max)."""
+    return _sim_pairs_banded(spark, sf_dir, n_splits=1)
 
+
+def _sim_pairs_banded(spark: SparkSession, sf_dir: str, n_splits: int) -> DataFrame:
+    """j_sim_pairs_banded's plan with each (band, key) bucket salted
+    into n_splits(n_splits+1)/2 split-pair tasks."""
     t = load(spark, sf_dir)
     from ..operators.similarity import banded_gemm_pairs, hyperplane_band_keys
 
@@ -1711,7 +1714,7 @@ def j_sim_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         tagged,
         tau=0.3,
         parallelism=spark.sparkContext.defaultParallelism,
-        n_splits=int(os.environ.get("SPARK_GRAFT_BANDED_SPLITS", "1")),
+        n_splits=n_splits,
     )
     return cand.groupBy("id_a", "id_b").agg(
         F.min("band").cast("long").alias("band"), F.min("score").alias("score")

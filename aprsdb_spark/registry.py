@@ -2,8 +2,8 @@
 
 Every operator registers here via the ``@query`` decorator; the driver's
 ``__spark_entry__.queries()`` / ``oracle_sql()`` are thin views over these
-dicts. A qid with ``oracle=None`` gets the driver's weaker rows-only check
-(SURVEY.md §2 '◦' rows).
+dicts. Every qid registers with its DuckDB value oracle, so the two
+views hold the same keys.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 
-def query(qid: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(qid: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if qid in QUERIES:
             raise ValueError(f"duplicate qid {qid!r}")
@@ -41,8 +41,7 @@ def query(qid: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
             return fn(spark, sf_dir)
 
         QUERIES[qid] = wrapped
-        if oracle is not None:
-            ORACLE[qid] = oracle
+        ORACLE[qid] = oracle
         # Return the WRAPPED function: the module-level name and the
         # registry entry must behave identically, or a direct call (tests,
         # cross-query reuse) silently skips tune()'s conf pinning.
@@ -90,9 +89,8 @@ def scored_window(qids: list[str], rounds: dict[int, set[str]]) -> list[str]:
 
 
 def driver_ordered(d: dict) -> dict:
-    """Reorder a registry view so the scored window comes first,
-    followed by the rest in registration order. The window is chosen
-    over all of QUERIES, so views of different subsets (ORACLE) share
-    one head order; names missing from ``d`` are skipped."""
-    head = {q: d[q] for q in scored_window(list(QUERIES), correctness_rounds()) if q in d}
+    """Reorder a registry view (QUERIES or ORACLE, which hold the same
+    qids) so the scored window comes first, followed by the rest in
+    registration order."""
+    head = {q: d[q] for q in scored_window(list(QUERIES), correctness_rounds())}
     return head | {q: v for q, v in d.items() if q not in head}

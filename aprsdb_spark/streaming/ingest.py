@@ -35,19 +35,30 @@ from pyspark.sql import functions as F
 from ..aprs.parse import parse_packets, parse_tnc2
 
 
+def _read_store(spark: SparkSession, state_dir: str) -> DataFrame:
+    """A sink store as its last completed publish, in the sink's logical
+    schema. Every read of a store goes through here (_merge_store, the
+    append sinks, every view), so none serves a half-published store:
+    a publish that crashed part-way is finished first
+    (_recover_incomplete_swap; at most two stat calls when there is
+    none). A store never written raises Spark's AnalysisException."""
+    _recover_incomplete_swap(spark, state_dir)
+    # drop is a no-op for absent columns: states written with the
+    # embedded replay marker (_run_key/_batch_id, see
+    # _last_applied_batch) and legacy marker-less states both come
+    # back in the sink's logical schema
+    return spark.read.parquet(state_dir).drop("_run_key", "_batch_id")
+
+
 def _read_state_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Load a sink's parquet state, returning None ONLY when the path
+    """_read_store for the sinks, returning None ONLY when the path
     does not exist yet (first batch). Any other failure — transient IO,
     a partially-written/corrupt store — propagates so the micro-batch
     fails and Structured Streaming retries it; swallowing those here
     would silently reset additive state to just the current batch's
     partial (ADVICE r6)."""
     try:
-        # drop is a no-op for absent columns: states written with the
-        # embedded replay marker (_run_key/_batch_id, see
-        # _last_applied_batch) and legacy marker-less states both come
-        # back in the sink's logical schema
-        return spark.read.parquet(path).drop("_run_key", "_batch_id")
+        return _read_store(spark, path)
     except AnalysisException as e:
         cond = getattr(e, "getCondition", lambda: None)() or ""
         if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(e):
@@ -319,7 +330,7 @@ def _recover_incomplete_swap(spark: SparkSession, state_dir: str) -> None:
     retry would skip the batch and freeze truncated state. `_next`
     still holds the complete state, so redo the publish before anything
     reads it. (A crash during the `_next` write leaves the main dir
-    intact.) Runs at the top of _merge_store and in the views; a
+    intact.) Runs only in _read_store, before every read of a store; a
     completed main dir makes it two stat calls."""
     import os
 
@@ -363,14 +374,17 @@ def _merge_store(
     """Fold one micro-batch into one parquet state store — the
     read-merge-publish every overwrite sink below runs, once per store:
 
-    1. finish a publish that crashed part-way (_recover_incomplete_swap);
+    1. read the stored rows (none on the first batch) through
+       _read_store, which first finishes a publish that crashed
+       part-way — before the guard, which distrusts the embedded
+       marker until the recovery puts `_SUCCESS` back, and would let
+       through a batch the recovered state already holds;
     2. skip a batch already applied for ``run_key`` (_last_applied_batch);
-    3. read the stored rows (none on the first batch);
-    4. ``merge`` them with ``partial`` into the new state — on the first
+    3. ``merge`` them with ``partial`` into the new state — on the first
        batch too, so a partial may be one row per input row;
-    5. commit the result with the embedded marker to `<dir>_next` and
+    4. commit the result with the embedded marker to `<dir>_next` and
        publish it by hard link (_write_state);
-    6. record the batch in the sidecar (_record_applied_batch).
+    5. record the batch in the sidecar (_record_applied_batch).
 
     Idempotence under replay: foreachBatch is at-least-once — after a
     crash the restarted query re-delivers the last micro-batch with the
@@ -392,11 +406,9 @@ def _merge_store(
     a re-delivery after a crash between two stores' publishes re-applies
     only the stores that missed the batch. Keep ``state_dir`` on a local
     file system (_publish links files)."""
-    spark = partial.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
+    state = _read_state_or_none(partial.sparkSession, state_dir)
     if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
         return
-    state = _read_state_or_none(spark, state_dir)
     merged = merge(partial if state is None else state.unionByName(partial))
     _write_state(_with_marker(merged, run_key, batch_id), state_dir)
     if run_key is not None:
@@ -448,20 +460,6 @@ def upsert_stations_sink(
         F.col("longitude").alias("last_lon"),
     )
     _merge_store(part, batch_id, stations_dir, run_key, merge)
-
-
-def run_available_now(stream_df: DataFrame, checkpoint: str, sink=None, **foreach_kwargs):
-    """Drain everything currently available, then stop (deterministic
-    test driver; also the cron-batch deployment mode)."""
-    w = stream_df.writeStream.option("checkpointLocation", checkpoint).trigger(
-        availableNow=True
-    )
-    if sink is not None:
-        q = w.foreachBatch(lambda b, i: sink(b, i, **foreach_kwargs)).outputMode("update").start()
-    else:
-        q = w.format("memory").queryName("_test_sink").outputMode("append").start()
-    q.awaitTermination()
-    return q
 
 
 def incremental_rollup_sink(
@@ -536,7 +534,7 @@ def cdc_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     """The queryable snapshot over cdc_apply_sink's store: surviving
     keys only (tombstones filtered), in the batch operator's column
     contract."""
-    s = spark.read.parquet(state_dir)
+    s = _read_store(spark, state_dir)
     return s.where(F.col("op") != "D").select(
         "user_id",
         F.col("op").alias("last_op"),
@@ -792,7 +790,7 @@ def drift_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     identity over equal count matrices, not a reimplementation."""
     from ..queries.timeseries import drift_from_counts
 
-    state = spark.read.parquet(state_dir).select("day_idx", "bucket", "oc")
+    state = _read_store(spark, state_dir).select("day_idx", "bucket", "oc")
     return drift_from_counts(state)
 
 
@@ -833,7 +831,7 @@ def quality_gate_view(spark: SparkSession, state_dir: str) -> DataFrame:
     from ..queries.governance import wilson_from_counts
 
     return wilson_from_counts(
-        spark.read.parquet(state_dir).select("source", "n", "x")
+        _read_store(spark, state_dir).select("source", "n", "x")
     )
 
 
@@ -884,11 +882,11 @@ def card_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     shared rollup (queries/governance.data_card_from_parts)."""
     from ..queries.governance import data_card_from_parts
 
-    a = spark.read.parquet(state_dir + "_lang").select("source", "lang", "n")
-    b = spark.read.parquet(state_dir + "_digest").select(
+    a = _read_store(spark, state_dir + "_lang").select("source", "lang", "n")
+    b = _read_store(spark, state_dir + "_digest").select(
         "source", "digest", "n", "sum_chars", "sum_toks"
     )
-    c = spark.read.parquet(state_dir + "_token").select("source", "token", "n")
+    c = _read_store(spark, state_dir + "_token").select("source", "token", "n")
     return data_card_from_parts(a, b, c)
 
 
@@ -942,8 +940,8 @@ def cms_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     shared rollup (queries/sketches.cms_relation)."""
     from ..queries.sketches import cms_relation
 
-    cms = spark.read.parquet(state_dir + "_cells").select("d", "bucket", "c")
-    truth = spark.read.parquet(state_dir + "_truth").select("tok", "true_count")
+    cms = _read_store(spark, state_dir + "_cells").select("d", "bucket", "c")
+    truth = _read_store(spark, state_dir + "_truth").select("tok", "true_count")
     return cms_relation(cms, truth)
 
 
@@ -984,9 +982,9 @@ def hll_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     shared rollup (queries/sketches.hll_relation)."""
     from ..queries.sketches import hll_relation
 
-    regs = spark.read.parquet(state_dir + "_regs").select("reg", "r")
+    regs = _read_store(spark, state_dir + "_regs").select("reg", "r")
     truth = (
-        spark.read.parquet(state_dir + "_users")
+        _read_store(spark, state_dir + "_users")
         .agg(F.countDistinct("user_id").cast("long").alias("n_true"))
     )
     return hll_relation(regs, truth)
@@ -1044,11 +1042,6 @@ def ivf_balance_view(spark: SparkSession, state_dir: str, k: int) -> DataFrame:
     rollup (queries/llm.ivf_balance_from_occ)."""
     from ..queries.llm import ivf_balance_from_occ
 
-    # A monitor refresh between a crash mid-swap and the sink's next
-    # micro-batch would otherwise serve truncated state (the sink only
-    # self-heals on its next invocation) — recover on the READ side too
-    # (ADVICE r15); a completed main dir makes this a no-op stat call.
-    _recover_incomplete_swap(spark, state_dir)
     # The state frame is metadata-sized BY CONSTRUCTION (<= k rows, one
     # per occupied cell — the sink pre-aggregates per batch), so collect
     # it ONCE and serve both the truncation guard and the returned plan
@@ -1058,7 +1051,7 @@ def ivf_balance_view(spark: SparkSession, state_dir: str, k: int) -> DataFrame:
     # per refresh, and the two scans could straddle a sink swap
     # (ADVICE r14). A snapshot is also the right monitor semantics: the
     # guard and the served rows describe the same state version.
-    stored = spark.read.parquet(state_dir).select("cluster_id", "n_vecs").collect()
+    stored = _read_store(spark, state_dir).select("cluster_id", "n_vecs").collect()
     # A k smaller than the quantizer the sink actually used would DROP
     # occupied cells in the spine join below and silently renormalize
     # share/load_factor over the truncated spine — fail instead.
@@ -1107,20 +1100,15 @@ def lateness_monitor_sink(
     order would re-classify the batch against a watermark its own rows
     advanced, double-dropping borderline rows. Both stores merge
     through _merge_store, each with its own replay guard. The
-    watermark is read before either, with a view's read-side recovery,
-    because the panel classifies against it. A batch without rows
-    writes no watermark row.
+    watermark is read before either, because the panel classifies
+    against it. A batch without rows writes no watermark row.
 
     Scale shape: the panel is |windows| rows (calendar-sized), the
     watermark store is 1 row, and the per-batch work is one narrow
     classification map + one window_start hash agg with map-side
     partials. Input schema: (ts_ms BIGINT)."""
-    spark = batch.sparkSession
     wm_dir, panel_dir = state_dir + "_wm", state_dir + "_panel"
-    # read-side recovery, as the views do: the panel classifies against
-    # the stored watermark before either store's _merge_store runs
-    _recover_incomplete_swap(spark, wm_dir)
-    stored = _read_state_or_none(spark, wm_dir)
+    stored = _read_state_or_none(batch.sparkSession, wm_dir)
     wm = None if stored is None else stored.agg(F.max("wm_ms")).head()[0]
     late = (F.col("ts_ms") < F.lit(wm) if wm is not None else F.lit(False)).cast("long")
     panel = batch.select(
@@ -1147,15 +1135,10 @@ def lateness_view(spark: SparkSession, state_dir: str) -> DataFrame:
     dropped_late, late_share) ordered facts plus the current watermark
     as a column — one glance says which windows are losing data and
     whether the delay budget is sized right."""
-    # Read-side crash recovery, same rationale as ivf_balance_view: a
-    # refresh between a mid-swap crash and the next micro-batch must
-    # not serve a truncated panel or a stale watermark (ADVICE r15).
-    _recover_incomplete_swap(spark, state_dir + "_panel")
-    _recover_incomplete_swap(spark, state_dir + "_wm")
-    panel = spark.read.parquet(state_dir + "_panel").select(
+    panel = _read_store(spark, state_dir + "_panel").select(
         "window_start_ms", "admitted", "dropped_late"
     )
-    wm = spark.read.parquet(state_dir + "_wm").agg(
+    wm = _read_store(spark, state_dir + "_wm").agg(
         F.max("wm_ms").alias("watermark_ms")
     )
     return panel.crossJoin(F.broadcast(wm)).select(
@@ -1263,12 +1246,8 @@ def volume_monitor_sink(
 
 def _volume_daily(spark: SparkSession, state_dir: str) -> DataFrame:
     """The accumulated state as the (event_type, day DATE, v) relation
-    the shared chart rollups expect. Read-side crash recovery first
-    (the lateness_view / ivf_balance_view ADVICE-r15 rule): a refresh
-    between a mid-swap crash and the next micro-batch must not serve a
-    truncated count matrix."""
-    _recover_incomplete_swap(spark, state_dir)
-    return spark.read.parquet(state_dir).select(
+    the shared chart rollups expect."""
+    return _read_store(spark, state_dir).select(
         "event_type",
         F.date_from_unix_date(F.col("day_idx").cast("int")).alias("day"),
         F.col("c").cast("long").alias("v"),
@@ -1335,10 +1314,8 @@ def lifetime_monitor_sink(
 
 def _lifetimes(spark: SparkSession, state_dir: str) -> DataFrame:
     """The accumulated state as the per-user (user_id, dur, ld)
-    relation the shared survival rollups expect, with read-side
-    mid-swap recovery (the ADVICE-r15 rule)."""
-    _recover_incomplete_swap(spark, state_dir)
-    return spark.read.parquet(state_dir).select(
+    relation the shared survival rollups expect."""
+    return _read_store(spark, state_dir).select(
         "user_id",
         (F.col("last_idx") - F.col("first_idx")).cast("long").alias("dur"),
         F.date_from_unix_date(F.col("last_idx").cast("int")).alias("ld"),

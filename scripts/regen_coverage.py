@@ -16,27 +16,24 @@ import aprsdb_spark.registry as R
 
 R.load_all()
 n = len(R.QUERIES)
-n_oracle = len(R.ORACLE)
 
 with open("COVERAGE.md") as f:
     text = f.read()
 
-head, _, _ = text.partition("| qid | oracle |")
+head, _, _ = text.partition("| qid |")
 head = re.sub(
-    r"\d+ registered qids; \*\*\d+ DuckDB-oracle-checked, \d+ rows-only\*\*",
-    f"{n} registered qids; **{n_oracle} DuckDB-oracle-checked, "
-    f"{n - n_oracle} rows-only**",
+    r"\d+ registered qids, each DuckDB-oracle-checked",
+    f"{n} registered qids, each DuckDB-oracle-checked",
     head,
 )
 
-rows = ["| qid | oracle | module | summary |", "| --- | --- | --- | --- |"]
+rows = ["| qid | module | summary |", "| --- | --- | --- |"]
 for qid in sorted(R.QUERIES):
     fn = R.QUERIES[qid]
     mod = fn.__module__.replace("aprsdb_spark.", "")
     summary = (fn.__doc__ or "").strip().split("\n")[0][:60].replace("|", "\\|")
-    mark = "✓ hash-checked" if qid in R.ORACLE else "◦ rows-only"
-    rows.append(f"| `{qid}` | {mark} | {mod} | {summary} |")
+    rows.append(f"| `{qid}` | {mod} | {summary} |")
 
 with open("COVERAGE.md", "w") as f:
     f.write(head + "\n".join(rows) + "\n")
-print(f"COVERAGE.md: {n} qids, {n_oracle} oracle-checked")
+print(f"COVERAGE.md: {n} qids")

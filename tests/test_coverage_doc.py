@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 import re
 
-from aprsdb_spark.registry import ORACLE, QUERIES, load_all
+from aprsdb_spark.registry import QUERIES, load_all
 
 load_all()
 
@@ -33,12 +33,7 @@ def test_coverage_table_matches_registry():
 def test_coverage_header_counts_are_real():
     with open(_DOC) as f:
         head = f.read().split("| qid |")[0]
-    m = re.search(
-        r"(\d+) registered qids; \*\*(\d+) DuckDB-oracle-checked, (\d+) rows-only\*\*",
-        head,
-    )
+    m = re.search(r"(\d+) registered qids, each DuckDB-oracle-checked", head)
     assert m, "COVERAGE.md count line missing or reformatted"
-    n, n_oracle, n_rows_only = map(int, m.groups())
+    n = int(m.group(1))
     assert n == len(QUERIES), f"header says {n}, registry has {len(QUERIES)}"
-    assert n_oracle == len(ORACLE)
-    assert n_rows_only == len(QUERIES) - len(ORACLE)

@@ -86,27 +86,10 @@ def test_window_does_not_depend_on_cwd(tmp_path, monkeypatch):
 
 
 def test_queries_and_oracle_share_the_rotation():
-    """oracle_sql() must follow the same head order as queries() for its
-    covered qids — the driver zips positionally over its own iteration."""
-    qkeys = [q for q in entry_mod.queries() if q in entry_mod.oracle_sql()]
-    okeys = list(entry_mod.oracle_sql())
-    assert qkeys == okeys
-
-
-def test_every_query_has_a_value_oracle():
-    """The registry's 0-rows-only claim as an executable invariant:
-    every registered qid ships a DuckDB value oracle. ROWS_ONLY_ALLOWED
-    is the explicit exception list — empty today; a genuinely
-    non-SQL-expressible op must be added there deliberately. An oracle
-    builder that fails (e.g. kmeans training on missing testdata) now
-    raises at import instead of returning None, so coverage can only
-    shrink by editing this test."""
-    rows_only_allowed: set[str] = set()
-    qs = set(entry_mod.queries())
-    oracles = set(entry_mod.oracle_sql())
-    missing = qs - oracles - rows_only_allowed
-    assert not missing, f"qids without a value oracle: {sorted(missing)}"
-    assert oracles <= qs, f"orphan oracles: {sorted(oracles - qs)}"
+    """oracle_sql() holds the same qids as queries(), in the same head
+    order — the driver zips positionally over its own iteration, and the
+    registry requires every qid to ship a DuckDB value oracle."""
+    assert list(entry_mod.queries()) == list(entry_mod.oracle_sql())
 
 
 def test_full_registry_is_preserved():

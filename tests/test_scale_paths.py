@@ -320,22 +320,21 @@ def test_pq_recall_floor(spark):
     assert row.n_exact == 10 and row.recall >= 0.6, f"PQ recall regressed: {row}"
 
 
-def test_registered_banded_plan_split_invariance(spark, monkeypatch):
-    """End-to-end skew-split proof on the REGISTERED qid, not just the
-    kernel helper: j_sim_pairs_banded with SPARK_GRAFT_BANDED_SPLITS=3
-    (every (band, key) bucket salted into 6 co-grouped split-pair
-    tasks) must return the bit-identical relation to the unsalted run —
+def test_registered_banded_plan_split_invariance(spark):
+    """End-to-end skew-split proof on the REGISTERED plan, not just the
+    kernel helper: j_sim_pairs_banded's builder at n_splits=3 (every
+    (band, key) bucket salted into 6 co-grouped split-pair tasks) must
+    return the bit-identical relation to the registered, unsalted qid —
     same pairs, same lowest-collision band, same scores. This is the
     recipe SCALE.md §4n prescribes for hot buckets at 100 TB, executed
     through the full plan: posexplode -> split replication ->
     applyInPandas -> pair-dedup agg."""
+    from aprsdb_spark.queries.llm import _sim_pairs_banded
     from aprsdb_spark.registry import QUERIES, load_all
 
     load_all()
-    monkeypatch.delenv("SPARK_GRAFT_BANDED_SPLITS", raising=False)
     base = {tuple(r) for r in QUERIES["j_sim_pairs_banded"](spark, SF).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_BANDED_SPLITS", "3")
-    salted = {tuple(r) for r in QUERIES["j_sim_pairs_banded"](spark, SF).collect()}
+    salted = {tuple(r) for r in _sim_pairs_banded(spark, SF, n_splits=3).collect()}
     assert len(base) > 100, "fixture too sparse to exercise the banded path"
     assert salted == base
 

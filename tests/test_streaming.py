@@ -9,6 +9,7 @@ from datetime import date
 from pathlib import Path
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from aprsdb_spark.streaming import ingest as S
@@ -1578,64 +1579,6 @@ def test_lateness_monitor_conservation_and_watermark_semantics(spark, tmp_path):
     assert after == before
 
 
-def test_monitor_views_recover_crash_mid_swap_on_read(spark, tmp_path):
-    """ADVICE r15: the read-side views (lateness_view,
-    ivf_balance_view) must not serve truncated state when a monitor
-    refresh lands BETWEEN a crash mid-swap and the sink's next
-    micro-batch — the sink self-heals only on its next invocation, so
-    the views call _recover_incomplete_swap themselves. Simulate the
-    crash window by deleting the main dir's _SUCCESS after a completed
-    batch (leaving _next authoritative) and read the view directly."""
-    import os
-
-    base = 1704067200000
-    hour = 3600_000
-
-    def frame(rows):
-        return spark.createDataFrame([(int(r),) for r in rows], "ts_ms long")
-
-    # --- lateness panel + watermark store
-    state = str(tmp_path / "late_state")
-    b0 = [base, base + hour]
-    b1 = [base + 3 * hour]
-    S.lateness_monitor_sink(frame(b0), 0, state, run_key="rk")
-    S.lateness_monitor_sink(frame(b1), 1, state, run_key="rk")
-    want = sorted(
-        (r["window_start_ms"], r["admitted"], r["dropped_late"], r["watermark_ms"])
-        for r in S.lateness_view(spark, state).collect()
-    )
-    os.remove(os.path.join(state + "_panel", "_SUCCESS"))  # crash mid-swap
-    os.remove(os.path.join(state + "_wm", "_SUCCESS"))
-    got = sorted(
-        (r["window_start_ms"], r["admitted"], r["dropped_late"], r["watermark_ms"])
-        for r in S.lateness_view(spark, state).collect()
-    )
-    assert got == want
-    # recovery restored the committed markers, not just this one read
-    assert os.path.exists(os.path.join(state + "_panel", "_SUCCESS"))
-    assert os.path.exists(os.path.join(state + "_wm", "_SUCCESS"))
-
-    # --- IVF occupancy store
-    from aprsdb_spark.operators.similarity import kmeans_train_local
-
-    sf = "/root/testdata/sf0.001"
-    cents = kmeans_train_local(sf, k=16, iters=2)
-    emb = spark.read.parquet(sf + "/embeddings.parquet")
-    occ_state = str(tmp_path / "ivf_occ_state")
-    halves = [emb.where(F.col("vec_id") % 2 == k) for k in range(2)]
-    for k, b in enumerate(halves):
-        S.ivf_occupancy_sink(b, k, occ_state, cents, run_key="rk")
-    want_occ = sorted(
-        tuple(r) for r in S.ivf_balance_view(spark, occ_state, k=16).collect()
-    )
-    os.remove(os.path.join(occ_state, "_SUCCESS"))  # crash mid-swap
-    got_occ = sorted(
-        tuple(r) for r in S.ivf_balance_view(spark, occ_state, k=16).collect()
-    )
-    assert got_occ == want_occ
-    assert os.path.exists(os.path.join(occ_state, "_SUCCESS"))
-
-
 def test_stream_stream_left_outer_ack_semantics(spark, tmp_path):
     """Stream-stream LEFT OUTER join (§2.I closure, r15 verdict item):
     the never-acked query. Pins the three facts that make outer
@@ -1785,36 +1728,6 @@ def test_volume_monitor_split_invariance(spark, tmp_path):
         for r in spark.read.parquet(s3).select("event_type", "day_idx", "c").collect()
     )
     assert m2 == m3
-
-
-def test_volume_monitor_recovers_mid_swap_crash_on_read(spark, tmp_path):
-    """A crash between the _next write and the state swap must be
-    healed by the VIEW (read-side recovery, the ADVICE-r15 rule), not
-    only by the next sink invocation: corrupt the state dir after a
-    completed swap, leave a good _next, and the chart views must still
-    serve the full matrix."""
-    from aprsdb_spark.tables import load as tload
-
-    sf = "/root/testdata/sf0.001"
-    ev = tload(spark, sf).events.select("ts_ms", "event_type", "event_id")
-    state = str(tmp_path / "crash_state")
-    S.volume_monitor_sink(ev.select("ts_ms", "event_type"), 0, state, run_key="c")
-    good = sorted(
-        (r.event_type, r.day_idx, r.c)
-        for r in spark.read.parquet(state)
-        .select("event_type", "day_idx", "c")
-        .collect()
-    )
-    # simulate: _next fully written (it is, from the completed swap),
-    # then the state dir is lost mid-overwrite
-    shutil.rmtree(state)
-    got = sorted(
-        (r.event_type, r.day_idx, int(r.v))
-        for r in S._volume_daily(spark, state)
-        .select("event_type", F.expr("CAST(day - DATE '1970-01-01' AS LONG)").alias("day_idx"), "v")
-        .collect()
-    )
-    assert got == good
 
 
 def test_lifetime_monitor_matches_both_survival_twins(spark, tmp_path):
@@ -2003,6 +1916,25 @@ _STORE_SINKS = {
 }
 _APPEND_SINKS = {"dedup_ingest_sink", "ann_ingest_sink"}
 _STORES = [(name, store) for name, case in _STORE_SINKS.items() for store in case[4]]
+# every public view -> (the sink case whose stores it reads, how to call it)
+_VIEWS = {
+    "cdc_current_view": ("cdc_apply_sink", S.cdc_current_view),
+    "drift_current_view": ("drift_monitor_sink", S.drift_current_view),
+    "quality_gate_view": ("quality_gate_sink", S.quality_gate_view),
+    "card_current_view": ("card_monitor_sink", S.card_current_view),
+    "cms_current_view": ("cms_monitor_sink", S.cms_current_view),
+    "cms_topk_view": ("cms_monitor_sink", S.cms_topk_view),
+    "hll_current_view": ("hll_monitor_sink", S.hll_current_view),
+    "ivf_balance_view": (
+        "ivf_occupancy_sink", lambda spark, d: S.ivf_balance_view(spark, d, k=2)
+    ),
+    "lateness_view": ("lateness_monitor_sink", S.lateness_view),
+    "cusum_current_view": ("volume_monitor_sink", S.cusum_current_view),
+    "ewma_current_view": ("volume_monitor_sink", S.ewma_current_view),
+    "km_current_view": ("lifetime_monitor_sink", S.km_current_view),
+    "logrank_current_view": ("lifetime_monitor_sink", S.logrank_current_view),
+}
+_VIEW_STORES = [(v, store) for v, (sink, _) in _VIEWS.items() for store in _STORE_SINKS[sink][4]]
 
 
 def _run_two_batches(spark, tmp_path, name):
@@ -2029,6 +1961,18 @@ def _snapshot(spark, tmp_path):
     return out
 
 
+def _crash_mid_publish(d):
+    """Leave store ``d`` as a publish that crashed part-way: no
+    `_SUCCESS` and one data file short, beside its complete `_next`.
+    Returns the store's file names before the crash."""
+    import os
+
+    files = sorted(os.listdir(d))
+    os.remove(os.path.join(d, "_SUCCESS"))
+    os.remove(os.path.join(d, next(n for n in files if n.endswith(".parquet"))))
+    return files
+
+
 @pytest.mark.parametrize("name,store", _STORES, ids=[n + s for n, s in _STORES])
 def test_store_recovers_crash_mid_publish(spark, tmp_path, name, store):
     """A crash while batch 1 is published to one store leaves its main
@@ -2042,9 +1986,7 @@ def test_store_recovers_crash_mid_publish(spark, tmp_path, name, store):
     call, b1, root = _run_two_batches(spark, tmp_path, name)
     want = _snapshot(spark, tmp_path)
     d = root + store
-    files = sorted(os.listdir(d))
-    os.remove(os.path.join(d, "_SUCCESS"))
-    os.remove(os.path.join(d, next(n for n in files if n.endswith(".parquet"))))
+    files = _crash_mid_publish(d)
     S._record_applied_batch(d, "ck", 0)
     assert S._last_applied_batch(d, "ck") == 0  # partial state's marker untrusted
     call(b1, 1, root, run_key="ck")
@@ -2078,18 +2020,44 @@ def test_store_skips_redelivered_batch(spark, tmp_path, name, store):
     assert _snapshot(spark, tmp_path) == want
 
 
+@pytest.mark.parametrize(
+    "view,store", _VIEW_STORES, ids=[f"{v}-state{s}" for v, s in _VIEW_STORES]
+)
+def test_view_recovers_crash_mid_publish(spark, tmp_path, view, store):
+    """A view read between a crash mid-publish and the sink's next
+    batch serves the last committed state, not the truncated store:
+    the view finishes the publish itself, so `_SUCCESS` is back. Two
+    crash points: part-way through the links, and after the publish
+    removed the main dir. Before any batch, the view fails with Spark's
+    AnalysisException."""
+    import os
+
+    sink, read = _VIEWS[view]
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read(spark, str(tmp_path / "state"))
+    _, _, root = _run_two_batches(spark, tmp_path, sink)
+    rows = lambda: sorted((tuple(r) for r in read(spark, root).collect()), key=repr)
+    want = rows()
+    for crash in (_crash_mid_publish, shutil.rmtree):
+        crash(root + store)
+        assert rows() == want
+        assert os.path.exists(os.path.join(root + store, "_SUCCESS"))
+
+
 def test_every_sink_has_crash_and_replay_cases():
     """Every public foreachBatch sink either folds its stores through
-    _merge_store and is a case of the two tests above, or is one of the
-    append-only sinks — a new sink cannot skip crash/replay coverage."""
+    _merge_store and is a case of the two store tests above, or is one
+    of the append-only sinks, and every public view is a case of the
+    view test — a new sink or view cannot skip crash/replay coverage."""
     import inspect
 
-    sinks = {
+    public = {
         n
         for n, f in inspect.getmembers(S, inspect.isfunction)
-        if n.endswith("_sink") and not n.startswith("_") and f.__module__ == S.__name__
+        if not n.startswith("_") and f.__module__ == S.__name__
     }
-    assert sinks == set(_STORE_SINKS) | _APPEND_SINKS
+    assert {n for n in public if n.endswith("_sink")} == set(_STORE_SINKS) | _APPEND_SINKS
+    assert {n for n in public if n.endswith("_view")} == set(_VIEWS)
 
 
 def test_lateness_watermark_store_writes_no_row_for_an_empty_batch(spark, tmp_path):
